@@ -289,6 +289,14 @@ def _merge_base_timings(
             timings[name] = min(timings.get(name, float("inf")), t)
 
 
+def _note_failure(failed: dict[str, str], name: str, exc: Exception) -> None:
+    """Record ``name``'s exception in ``failed`` as "Type: message"
+    (capped at 200 chars) and echo it to stderr; stdout stays reserved
+    for the compact JSON line."""
+    failed[name] = f"{type(exc).__name__}: {exc}"[:200]
+    print(f"BENCH ERROR {name}: {failed[name]}", file=sys.stderr)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -387,11 +395,12 @@ def main() -> None:
         )
 
     # Warmup at the smallest SF: JIT, codegen cache, parquet footers.
+    warmup_failed: dict[str, str] = {}
     for name in to_run:
         try:
             queries[name](spark, "/root/testdata/sf0.001").count()
-        except Exception:
-            pass
+        except Exception as exc:
+            _note_failure(warmup_failed, name, exc)
 
     def run_pass(names: list[str]):
         """One timed sweep over ``names`` with interleaved contention
@@ -450,8 +459,7 @@ def main() -> None:
                 _book_ledger(entries)
                 timings[name] = round(max(0.001, elapsed - memo_sec), 3)
             except Exception as exc:  # one bad query must not sink the bench
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
+                _note_failure(errors, name, exc)
 
         probe(len(names))  # final checkpoint
         return timings, errors, probes, probe_names
@@ -472,8 +480,8 @@ def main() -> None:
     if _PROBE_Q in queries:
         try:
             queries[_PROBE_Q](spark, sf_dir).count()
-        except Exception:
-            pass
+        except Exception as exc:
+            _note_failure(warmup_failed, f"probe:{_PROBE_Q}", exc)
 
     timings, errors, probes, probe_names = run_pass(to_run)
     hot = _hot_window_names(probes, probe_names, sorted(timings), _PROBE_EVERY)
@@ -582,6 +590,10 @@ def main() -> None:
         # first-touch accounting — name it in the record, next to the
         # count, instead of hiding it inside a smaller memo_prebuilt_n
         out["memo_prebuild_failed"] = prebuild_failed
+    if warmup_failed:
+        # unrecorded warm-up runs that raised: a query that cannot even
+        # warm up is named here instead of being silently skipped
+        out["warmup_failed"] = warmup_failed
     # builder-source fingerprints (ADVICE r12 #1) — next run's merge
     # validates its base memo_build entries against these
     out["memo_fingerprints"] = memo_fps

@@ -1,14 +1,27 @@
 """Table catalog over the driver-provided parquet directories.
 
 All queries consume these tables (TESTDATA.md); no synthetic inputs.
-Reads are plain ``spark.read.parquet`` so Catalyst gets native column
+Reads are ``spark.read.parquet`` scans, so Catalyst gets native column
 pruning + predicate pushdown into the scan.
+
+Each table's schema is resolved once per session: the first read of a
+path infers it, and every later read passes the stored schema through
+``spark.read.schema(...)``. Parquet schema inference runs a one-task
+Spark job per read (~80 ms warm), and queries, memo builds and views
+all read through ``table()``, so an analyst sweep would otherwise pay
+that job on every table reference. The cache assumes a table's files
+do not change during a session — the same assumption ``caching.memo``
+makes. Only the schema is cached: every call still returns a new
+DataFrame, so the two sides of a self-join get distinct attribute ids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .caching import _session_key
 
 TABLES = (
     "region",
@@ -23,6 +36,9 @@ TABLES = (
     "embeddings",
 )
 
+# (session key, parquet path) -> schema inferred on the path's first read
+_SCHEMAS: dict[tuple, StructType] = {}
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -30,7 +46,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _tune_session(spark)
     if name == "events":
         return _events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    key = (_session_key(spark), path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def _tune_session(spark: SparkSession) -> None:
@@ -62,9 +88,15 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT ``cast(timestamp_micros(..) as timestamp_ntz)``, whose
     LTZ→NTZ step shifts values by the session time zone offset when
     the driver's session is not UTC.
+
+    The schema cache holds the raw schema (``ts`` as bigint), so the
+    conf must be set before every read, cached or not.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _nanos_to_ntz(_read(spark, f"{sf_dir}/events.parquet"))
+
+
+def _nanos_to_ntz(df: DataFrame) -> DataFrame:
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn(
             "ts",

@@ -493,3 +493,19 @@ def test_plan_audit_global_window_detector():
     assert pa._global_windows(global_ordered) == 1
     assert pa._global_windows(global_unordered) == 1
     assert pa._global_windows(partitioned + global_ordered) == 1
+
+
+
+def test_failures_recorded_as_type_and_message(capsys):
+    """Warm-up and timed-run exceptions land in their full-record map
+    (``warmup_failed`` / ``errors``) as "Type: message", capped at 200
+    chars, and are echoed to stderr only: the compact stdout line is
+    unchanged."""
+    failed: dict = {}
+    bench._note_failure(failed, "q_bad", ValueError("no tables under /x"))
+    bench._note_failure(failed, "probe:q_long", RuntimeError("x" * 500))
+    assert failed["q_bad"] == "ValueError: no tables under /x"
+    assert failed["probe:q_long"] == ("RuntimeError: " + "x" * 500)[:200]
+    out = capsys.readouterr()
+    assert out.out == ""
+    assert "BENCH ERROR q_bad: ValueError: no tables under /x" in out.err
