@@ -34,22 +34,6 @@ transients of a few minutes were observed mid-run in r5/r6):
   one-sided contention noise the minimum is the closest estimate of
   true cost. Only queries that never saw a clean window end up in
   "contention_warning"/"still_hot".
-- CROSS-RUN SELF-HEAL (VERDICT r5 #6): set SPARK_GRAFT_BENCH_BASE to a
-  prior bench JSON and only the queries inside that run's contaminated
-  probe windows (plus queries the base run never timed, plus an
-  explicit SPARK_GRAFT_BENCH_RERUN list) are re-run; clean base
-  timings are merged in unchanged, and a re-run query keeps the
-  MINIMUM of base and re-run — the same one-sided-noise policy as the
-  in-run heal, so a burst that slips BETWEEN probes during the re-run
-  (observed: 18 s on a 2 s query with both flanking probes ≤ 0.8 s)
-  cannot overwrite a cleaner base measurement. Cross-run min-merge is
-  only sound while the code is unchanged between the two runs; for
-  REWRITTEN queries list them in SPARK_GRAFT_BENCH_FRESH instead —
-  they are re-run but their base timing is NOT min-merged (it measured
-  different code; ADVICE r9 #1), so the record carries this run's own
-  measurement. The merged record carries "merged_from" +
-  "rerun_queries" + "fresh_queries" provenance, and "hist_min" keeps
-  each re-run/fresh query's prior base value for lineage comparison.
 
 Memo attribution (VERDICT r10 #1): session-shared memo artifacts
 (caching.py) made per-query numbers ORDER-DEPENDENT — whichever query
@@ -67,7 +51,7 @@ session pays each memo once.
 
 Round-12 refinements:
 - PREBUILD (VERDICT r11 #3): memo_prebuild.py is now a static registry
-  of every memo's builder, so all memos are built CONCURRENTLY in a
+  of every memo's builder, so all memos are built SERIALLY in a
   charged setup step before the timed loop (still booked to their
   "memo_build:<name>" line items). Per-query numbers are unchanged by
   construction (builds were already subtracted); what changes is that
@@ -85,11 +69,6 @@ Round-12 refinements:
   exclusive seconds (they measure work, and concurrent builds each did
   their own work); when their sum exceeds the union the overflow is
   surfaced as "memo_overlap_s" instead of silently double-booking.
-- STALE-ENTRY VALIDATION (ADVICE r11 #1): base-merge now drops
-  "memo_build:" entries whose memo name is not in the static registry
-  (renamed/removed memos previously survived the merge chain forever);
-  $SPARK_GRAFT_BENCH_MEMO_KEEP is an explicit comma-separated
-  allowlist for deliberate carries.
 """
 
 from __future__ import annotations
@@ -123,11 +102,11 @@ def _hot_window_names(probes: dict[str, float], probe_names: dict[str, str],
     A hot probe at position P (probes fire BEFORE the query at index P)
     contaminates [P - spacing, P + spacing): throttling developed
     somewhere in the preceding window and persists into the following
-    one until a clean probe. Positions index the run's own sorted
-    to_run list, but because that list is sorted, the window maps onto
+    one until a clean probe. Positions index the pass's own sorted
+    name list, but because that list is sorted, the window maps onto
     ANY name list as the lexicographic interval between the adjacent
-    probes' recorded names — so registry growth or subset re-runs
-    can't shift the mapping."""
+    probes' recorded names — so a heal pass over a subset can't shift
+    the mapping."""
     names: set[str] = set()
     for pos_s, v in probes.items():
         if v > _PROBE_HOT:
@@ -138,85 +117,15 @@ def _hot_window_names(probes: dict[str, float], probe_names: dict[str, str],
     return names
 
 
-def _contaminated_names(base: dict) -> set[str]:
-    """Query names whose timings in a prior bench record are untrusted.
-
-    A self-healed base (round 6+) records exactly which queries never
-    saw a clean window as "still_hot" — trust that. Otherwise fall
-    back to re-deriving hot probe windows from the base's probe data
-    (and for pre-r6 bases without probe_names, raw positional
-    windows)."""
-    if "still_hot" in base:
-        return set(base["still_hot"]) | set(base.get("errors", {}))
-    order = sorted(base.get("queries", {}))
-    n = len(order)
-    # window half-width = the BASE run's probe spacing (it may have
-    # been recorded under a different _PROBE_EVERY than current code)
-    pos = sorted(int(p) for p in base.get("sentinel_probes", {}))
-    spacing = max(
-        (b - a for a, b in zip(pos, pos[1:])), default=_PROBE_EVERY
-    )
-    probes = base.get("sentinel_probes", {})
-    probe_names = base.get("probe_names", {})
-    if probe_names:
-        names = _hot_window_names(probes, probe_names, order, spacing)
-    else:
-        # legacy base (pre-r6: positions only, full-run indices)
-        hot_idx: set[int] = set()
-        for pos_s, v in probes.items():
-            if v > _PROBE_HOT:
-                p = int(pos_s)
-                hot_idx.update(range(max(0, p - spacing), min(n, p + spacing)))
-        names = {order[i] for i in hot_idx}
-    # errored queries have no timing at all — always re-run
-    names.update(base.get("errors", {}))
-    return names
-
-
-def _load_base(base_path: str) -> dict:
-    """Load a prior bench record for cross-run self-heal.
-
-    Accepts a full-record file (single JSON object), a legacy
-    multi-line stdout capture (last line wins), or a compact stdout
-    summary — the latter identified by its own "queries_elided" marker
-    (it ALWAYS carries a "queries" key, elided to the top-K slowest, so
-    "queries not in base" never fires) and FOLLOWED to its full record
-    so still_hot/sentinel_probes/errors drive contamination detection
-    instead of degrading to "re-run everything except 10 un-vetted
-    timings". The recorded full_record path may have been
-    basename-shrunk or truncated by the summary's own byte budget
-    (ADVICE r9) — resolve relative to the summary file's directory, and
-    if the record is gone entirely, degrade to the compact summary
-    itself (re-run everything outside its top-K) instead of crashing."""
-    with open(base_path) as fh:
-        text = fh.read().strip()
-    try:  # full-record file (single JSON object, possibly pretty)
-        base = json.loads(text)
-    except json.JSONDecodeError:  # legacy multi-line stdout capture
-        base = json.loads(text.splitlines()[-1])
-    if "queries_elided" in base and base.get("full_record"):
-        rec = str(base["full_record"])
-        for cand in (rec, os.path.join(os.path.dirname(
-                os.path.abspath(base_path)), os.path.basename(rec))):
-            try:
-                with open(cand) as fh:
-                    base = json.loads(fh.read().strip())
-                break
-            except (OSError, json.JSONDecodeError):
-                continue
-    return base
-
-
 def _union_seconds(entries: list[dict], lo: float, hi: float) -> float:
     """Total length of the union of the entries' [t0, t1] intervals,
     clipped to [lo, hi] — the wall-clock a query actually spent inside
     memo builds/re-mats, immune to concurrent-thread double-counting
-    (ADVICE r11 #2). Entries without timestamps (legacy records)
-    contribute their "sec" additively, still capped by the window."""
+    (ADVICE r11 #2)."""
     ivs = sorted(
         (max(e["t0"], lo), min(e["t1"], hi))
         for e in entries
-        if "t0" in e and "t1" in e and min(e["t1"], hi) > max(e["t0"], lo)
+        if min(e["t1"], hi) > max(e["t0"], lo)
     )
     total = 0.0
     cur_lo = cur_hi = None
@@ -229,64 +138,7 @@ def _union_seconds(entries: list[dict], lo: float, hi: float) -> float:
             cur_hi = max(cur_hi, b)
     if cur_hi is not None:
         total += cur_hi - cur_lo
-    legacy = sum(e["sec"] for e in entries if "t0" not in e)
-    return min(total + legacy, hi - lo)
-
-
-def _merge_base_timings(
-    timings: dict[str, float],
-    errors: dict[str, str],
-    base_queries: dict[str, float],
-    registered: set[str],
-    fresh: set[str] = frozenset(),
-    known_memos: frozenset[str] = frozenset(),
-    memo_fps: dict[str, str] | None = None,
-    base_memo_fps: dict[str, str] | None = None,
-) -> None:
-    """Merge a prior run's timings into this run's, in place: clean
-    base timings fill queries not re-run; a re-run query keeps
-    min(base, rerun) — contention noise is one-sided, and a throttle
-    burst can land between probes DURING the heal re-run itself.
-    Base entries for unregistered queries are dropped; a query that
-    errored this run keeps no timing at all. ``fresh`` queries
-    (rewritten since the base run) never take the base value: their
-    pre-rewrite timing measured different code (ADVICE r9 #1).
-    "memo_build:<name>" pseudo-entries merge by the same min policy
-    (same-code builds measure the same work) — list them in ``fresh``
-    when the memo's build changed, and they are VALIDATED against
-    ``known_memos`` (the static memo_prebuild registry, plus the
-    $SPARK_GRAFT_BENCH_MEMO_KEEP allowlist): a renamed or removed
-    memo's build line item would otherwise survive the base-merge
-    chain forever, silently inflating the headline value with stale
-    seconds (ADVICE r11 #1). Base entries from a PRE-attribution
-    record (no memo entries of its own) still carry memo-inclusive
-    query timings; min-merge against them is safe (memo-exclusive
-    this-run values are never larger), but list memo-sharing queries
-    in SPARK_GRAFT_BENCH_FRESH on the first post-attribution merge if
-    exact lineage matters.
-
-    ``memo_fps``/``base_memo_fps`` (ADVICE r12 #1): builder-source
-    fingerprints (memo_prebuild.memo_fingerprints) recorded in each
-    bench output. A base memo_build entry whose fingerprint differs
-    from the current builder's — or is absent from a base that carries
-    fingerprints for this memo while the current registry does — is
-    dropped instead of min-merged: its seconds measured DIFFERENT
-    build code, so the auto-invalidation replaces the manual
-    SPARK_GRAFT_BENCH_FRESH listing for changed builders. Names
-    outside the registry (the explicit KEEP allowlist) have no
-    fingerprint on either side and merge as before."""
-    memo_fps = memo_fps or {}
-    base_memo_fps = base_memo_fps or {}
-    for name, t in base_queries.items():
-        if name.startswith("memo_build:"):
-            mname = name.split(":", 1)[1]
-            known = mname in known_memos
-            if known and mname in memo_fps:
-                known = base_memo_fps.get(mname) == memo_fps[mname]
-        else:
-            known = name in registered
-        if known and name not in errors and name not in fresh:
-            timings[name] = min(timings.get(name, float("inf")), t)
+    return min(total, hi - lo)
 
 
 def _note_failure(failed: dict[str, str], name: str, exc: Exception) -> None:
@@ -335,68 +187,20 @@ def main() -> None:
                     memo_remat.get(e["name"], 0.0) + e["sec"]
                 )
 
-    # Effective LSH plane configuration (ADVICE r13 #2): regular query
-    # timings min-merge across runs, and the r13 derived-planes change
-    # silently altered what the whole similarity family computes per
-    # corpus size; record the mode so a base recorded under a DIFFERENT
-    # mode (pinned vs derived, or another pin) fresh-lists the family
-    # instead of mixing configurations in one lineage record.
+    # Configuration provenance: the effective LSH plane mode (pinned vs
+    # derived changes what the whole similarity family computes per
+    # corpus size) and $SPARK_GRAFT_EXTRA_CONFS (session-wide Spark
+    # config), so a record states the configuration it measured.
     from data_pipeline_playground_spark.queries import similarity as _sim
 
     lsh_mode = (
         f"pinned:{_sim.N_PLANES}" if _sim.N_PLANES is not None else "derived"
     )
-    # Effective extra Spark confs (ADVICE r14 #1): $SPARK_GRAFT_EXTRA_CONFS
-    # silently changes Spark config for the whole session, so a min-merge
-    # against a base recorded under different confs would mix timings from
-    # different configurations — same contamination class as lsh_planes_mode.
-    # Recorded in every run; a mismatch fresh-lists EVERY query (confs are
-    # global, unlike the similarity-family-scoped plane mode).
     extra_confs = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
-
-    base: dict = {}
-    fresh: set = set()
-    base_path = os.environ.get("SPARK_GRAFT_BENCH_BASE", "")
-    to_run = sorted(queries)
-    if base_path:
-        base = _load_base(base_path)
-        if base.get("extra_confs", "") != extra_confs:
-            fresh.update(queries)
-        if base.get("lsh_planes_mode") != lsh_mode:
-            fresh.update(
-                name for name, fn in queries.items()
-                if fn.__module__.rsplit(".", 1)[-1] == "similarity"
-            )
-        contaminated = _contaminated_names(base)
-        # explicit additions: suspect queries outside any flagged window
-        # (e.g. inflated vs history while nearby probes stayed sub-hot)
-        extra = os.environ.get("SPARK_GRAFT_BENCH_RERUN", "")
-        contaminated.update(q for q in extra.split(",") if q)
-        # FRESH list (ADVICE r9 #1): queries whose CODE changed since
-        # the base run. They are re-run like RERUN entries but their
-        # base timing is NOT min-merged in — cross-run min-merge is
-        # only sound while the code is unchanged, and a rewritten
-        # query min-merged against its pre-rewrite base conflates two
-        # code versions in one record.
-        fresh.update(
-            q for q in
-            os.environ.get("SPARK_GRAFT_BENCH_FRESH", "").split(",")
-            if q)
-        contaminated.update(fresh)
-        to_run = sorted(
-            name
-            for name in queries
-            if name in contaminated or name not in base.get("queries", {})
-        )
-        print(
-            f"BENCH self-heal: re-running {len(to_run)}/{len(queries)} "
-            f"queries from contaminated windows of {base_path}",
-            file=sys.stderr,
-        )
 
     # Warmup at the smallest SF: JIT, codegen cache, parquet footers.
     warmup_failed: dict[str, str] = {}
-    for name in to_run:
+    for name in sorted(queries):
         try:
             queries[name](spark, "/root/testdata/sf0.001").count()
         except Exception as exc:
@@ -416,10 +220,10 @@ def main() -> None:
         def probe(position: int) -> None:
             if _PROBE_Q not in queries:
                 return
-            # the query ABOUT TO RUN at this position — lets self-heal
-            # (in-run or cross-run) map probe windows onto any registry.
-            # end-of-run marker sorts AFTER every real name so a hot
-            # final probe's window reaches the end of the list
+            # the query ABOUT TO RUN at this position — lets the heal
+            # map probe windows onto any name list. end-of-run marker
+            # sorts AFTER every real name so a hot final probe's window
+            # reaches the end of the list
             probe_names[str(position)] = (
                 names[position] if position < len(names) else "\uffff"
             )
@@ -465,14 +269,13 @@ def main() -> None:
         return timings, errors, probes, probe_names
 
     # PREBUILD (VERDICT r11 #3): construct every registered memo for
-    # the bench sf concurrently BEFORE the timed loop, charged to the
-    # same memo_build:<name> line items reactive builds used — builds
-    # no longer serialize inside the timed loop on first touch.
+    # the bench sf serially BEFORE the timed loop, charged to the same
+    # memo_build:<name> line items reactive builds used — builds no
+    # longer run inside the timed loop on first touch.
     caching.drain_ledger()  # discard warmup strays (sf0.001 keys)
     prebuild_failed: list[str] = []
     prebuilt = memo_prebuild.prebuild_all(spark, sf_dir, prebuild_failed)
     _book_ledger(caching.drain_ledger())
-    memo_fps = memo_prebuild.memo_fingerprints()
 
     # warm the probe query once at the bench SF (unrecorded): the first
     # sf0.1 execution pays plan compile + codegen, which would read as
@@ -483,7 +286,7 @@ def main() -> None:
         except Exception as exc:
             _note_failure(warmup_failed, f"probe:{_PROBE_Q}", exc)
 
-    timings, errors, probes, probe_names = run_pass(to_run)
+    timings, errors, probes, probe_names = run_pass(sorted(queries))
     hot = _hot_window_names(probes, probe_names, sorted(timings), _PROBE_EVERY)
     # a tripped sentinel's own timing is untrusted too — heal it
     hot.update(
@@ -515,34 +318,9 @@ def main() -> None:
         })
         hot = still
 
-    rerun = sorted(timings)
-    # historical minima the re-run timings were min-merged against
-    # (VERDICT r8 #7): lets a third-party read of a heal record judge
-    # each re-run entry against its prior best without chasing the
-    # base-file chain.
-    hist_min = {
-        q: base.get("queries", {})[q]
-        for q in rerun
-        if q in base.get("queries", {})
-    } if base else {}
-    if base:
-        keep = frozenset(
-            q for q in
-            os.environ.get("SPARK_GRAFT_BENCH_MEMO_KEEP", "").split(",")
-            if q
-        )
-        _merge_base_timings(
-            timings, errors, base.get("queries", {}), set(queries), fresh,
-            memo_prebuild.known_memo_names() | keep,
-            memo_fps=memo_fps,
-            base_memo_fps=base.get("memo_fingerprints", {}),
-        )
-
-    # book this run's memo builds as line items (min-merged against any
-    # base entries the merge above already placed — same-code builds
-    # measure the same work, and contention noise is one-sided)
+    # book this run's memo builds as line items
     for k, v in memo_build.items():
-        timings[k] = round(min(timings.get(k, float("inf")), v), 3)
+        timings[k] = round(v, 3)
 
     total = round(sum(timings.values()), 4)
     out = {
@@ -562,16 +340,6 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    if base:
-        out["merged_from"] = base_path
-        out["rerun_queries"] = rerun
-        if fresh:
-            # rewritten queries: timing is THIS run's alone (no base
-            # min-merge); hist_min still shows the pre-rewrite value
-            # for lineage comparison.
-            out["fresh_queries"] = sorted(fresh)
-        if hist_min:
-            out["hist_min"] = hist_min
     if memo_remat:
         # clearCache-artifact seconds stripped from query timings and
         # NOT counted in "value" (a long-lived session pays each memo
@@ -594,18 +362,11 @@ def main() -> None:
         # unrecorded warm-up runs that raised: a query that cannot even
         # warm up is named here instead of being silently skipped
         out["warmup_failed"] = warmup_failed
-    # builder-source fingerprints (ADVICE r12 #1) — next run's merge
-    # validates its base memo_build entries against these
-    out["memo_fingerprints"] = memo_fps
-    # effective LSH plane config (ADVICE r13 #2) — next run's merge
-    # fresh-lists the similarity family if this differs
     out["lsh_planes_mode"] = lsh_mode
-    # effective extra-confs string (ADVICE r14 #1) — next run's merge
-    # fresh-lists everything if this differs
     out["extra_confs"] = extra_confs
     out["sentinel_probes"] = probes
     out["probe_names"] = probe_names
-    # per-module family rollup of the merged timings (compact-summary
+    # per-module family rollup of the timings (compact-summary
     # material: round totals attributable at a glance)
     fam: dict[str, float] = {}
     for name, t in timings.items():
@@ -619,14 +380,13 @@ def main() -> None:
         out["heal"] = heal_log
     # Contention verdict AFTER healing: only queries that never saw a
     # clean window (or sentinels still above their idle-box bound in
-    # the final merged timings) make the run non-comparable — label it
+    # the final healed timings) make the run non-comparable — label it
     # so a throttled bench self-identifies instead of reading as a 10×
-    # plan regression. "still_hot" is the exact untrusted set; a later
-    # SPARK_GRAFT_BENCH_BASE run re-runs only those.
+    # plan regression. "still_hot" is the exact untrusted set.
     tripped = {
         q: timings[q]
         for q, lim in _SENTINELS.items()
-        if q in rerun and timings.get(q, 0.0) > lim
+        if timings.get(q, 0.0) > lim
     }
     out["still_hot"] = sorted(hot)
     if tripped or hot:
@@ -698,9 +458,6 @@ def _compact_summary(out: dict, full_path: str,
         summary["still_hot_sample"] = out["still_hot"][:5]
     if out.get("contention_warning"):
         summary["contention_warning"] = out["contention_warning"]
-    if out.get("merged_from"):
-        summary["merged_from"] = out["merged_from"]
-        summary["rerun_n"] = len(out.get("rerun_queries", []))
     if out.get("families"):
         summary["families"] = out["families"]
 
@@ -714,14 +471,14 @@ def _compact_summary(out: dict, full_path: str,
         if "contention_warning" in summary:
             summary["contention_warning"] = (
                 summary["contention_warning"][:117] + "...")
-    # last resort: env-supplied strings (full_record / merged_from are
-    # paths embedded verbatim; "sf" falls back to the WHOLE
+    # last resort: env-supplied strings (full_record is a path
+    # embedded verbatim; "sf" falls back to the WHOLE
     # $SPARK_GRAFT_SF_DIR when the path carries no "sf" marker) can
     # push even the top-0 form past the budget — shrink them to
     # basenames, then hard-truncate, so the <=1.5 KB tail-capture
     # contract holds for ANY input. Numeric sf values are never
     # touched (only str-typed entries are shrinkable).
-    _shrinkable = ("full_record", "merged_from", "sf")
+    _shrinkable = ("full_record", "sf")
 
     def _strkeys():
         return [k for k in _shrinkable if isinstance(summary.get(k), str)

@@ -4,21 +4,16 @@ r11 #1).
 caching.memo keys are created at query-construction time deep inside
 the query modules, so until round 12 there was no central list of memo
 names: the bench discovered builds reactively (whichever timed query
-touched a memo first paid its build into the ledger mid-loop), and the
-cross-run merge had no way to tell a legitimate historical
-``memo_build:<name>`` line item from a stale one left by a renamed or
-removed memo.
+touched a memo first paid its build into the ledger mid-loop).
 
 This module is that list. Each entry maps a memo name to a TOUCH
 callable ``(spark, sf_dir) -> Any`` — calling it runs the memo's
 build() (builds are eager: the builders cache()+count() inside), so
-``prebuild_all`` can construct every memo up front, concurrently,
-before the bench's timed loop; the ledger entries it leaves behind are
-booked to the same ``memo_build:<name>`` line items as before, and the
-timed loop then sees only re-materializations (a clearCache artifact,
-reported aside). ``KNOWN_MEMO_NAMES`` is the validation set for
-cross-run base merges: a base ``memo_build:`` entry whose memo no
-longer exists is dropped instead of riding the merge chain forever.
+``prebuild_all`` can construct every memo up front, serially and
+children before parents, before the bench's timed loop; the ledger
+entries it leaves behind are booked to the same ``memo_build:<name>``
+line items as before, and the timed loop then sees only
+re-materializations (a clearCache artifact, reported aside).
 
 Completeness is pinned by ``tests/test_caching.py``: a source scan for
 ``memo(spark, "<name>"`` / ``memo_key="<name>"`` literals must yield
@@ -115,59 +110,15 @@ def known_memo_names() -> frozenset[str]:
     return frozenset(touch_fns())
 
 
-# the one lambda touch lives in THIS module but wraps a builder defined
-# in dedup_advanced — fingerprint it against the builder's module, not
-# the wrapper's
+# Touch -> builder module, where they differ: the one lambda touch
+# lives in THIS module but wraps a builder defined in dedup_advanced.
+# Callers that choose memos by the query module that builds them (the
+# perfbench dedup_session memo set) read a touch's module through this
+# map, falling back to the touch's own ``__module__``.
 _FP_MODULE_OVERRIDES = {
     "shingle_hash_ex_sampled":
         "data_pipeline_playground_spark.queries.dedup_advanced",
 }
-
-
-def memo_fingerprints() -> dict[str, str]:
-    """memo name -> stable hash of the code that defines its build
-    (ADVICE r12 #1): the touch callable's defining module source,
-    combined with the source of every ``operators/`` and ``functions/``
-    module (the deep dependencies builds actually execute — e.g. the
-    lexrank_sentence_artifacts memo lives in queries/ml.py but its
-    build runs operators/lexrank.py). bench.py records these in each
-    bench output and refuses to min-merge a base ``memo_build:<name>``
-    line item whose fingerprint differs — a changed builder
-    auto-invalidates its historical timing instead of relying on the
-    operator remembering SPARK_GRAFT_BENCH_FRESH. Module granularity
-    over-invalidates (any edit in the module re-measures every memo it
-    defines) — the safe direction: the cost is one fresh measurement,
-    never a stale merged second. Round 14 (ADVICE r13 #1): the shared
-    component now also hashes queries/ — builders reach across query
-    modules (ml_checked's centroid builds import _embed_double/_l2sq
-    from queries/similarity.py), so an edit there must invalidate
-    their fingerprints too; whole-package granularity over-invalidates
-    in the same safe direction."""
-    import hashlib
-    import inspect
-    import pathlib
-    import sys
-
-    shared = hashlib.sha1()
-    pkg_dir = pathlib.Path(__file__).parent
-    for sub in ("operators", "functions", "queries"):
-        for path in sorted((pkg_dir / sub).glob("*.py")):
-            shared.update(path.read_bytes())
-    shared_hex = shared.hexdigest()
-
-    out: dict[str, str] = {}
-    mod_src_cache: dict[str, str] = {}
-    for name, fn in sorted(touch_fns().items()):
-        mod_name = _FP_MODULE_OVERRIDES.get(
-            name, getattr(fn, "__module__", __name__)
-        )
-        if mod_name not in mod_src_cache:
-            mod_src_cache[mod_name] = inspect.getsource(sys.modules[mod_name])
-        h = hashlib.sha1()
-        h.update(mod_src_cache[mod_name].encode())
-        h.update(shared_hex.encode())
-        out[name] = h.hexdigest()[:12]
-    return out
 
 
 # Measured solo build cost per memo (seconds, idle box, sf0.1 —
@@ -264,7 +215,7 @@ def prebuild_all(
     Scheduling (round 14, VERDICT r13 #3): builds run SERIALLY,
     lightest-first by the _SOLO_WEIGHTS table. The bench books each
     build's per-thread exclusive wall seconds as a ``memo_build:<name>``
-    line item counted in the headline "value", so CONCURRENT builds
+    line item counted in the headline "value", so OVERLAPPING builds
     inflate every line item with sibling contention — measured 60.2 s
     booked at the old 4-way width vs the 46.5 s solo-sum floor on the
     builder box (MEMO_SOLO_r13.txt), 86.9 s on the r14 box, and 188.5 s
@@ -278,11 +229,7 @@ def prebuild_all(
     Same-key nesting (minhash_est_sampled building on grams_sampled,
     copurchase_pairs on basket_pairs) is ordered explicitly via
     _MEMO_DEPS — children build before parents so the child memo
-    really is warm when the parent runs (ADVICE r14 #2);
-    caching.memo's per-key locks cover any residual race.
-    $SPARK_GRAFT_PREBUILD_CONCURRENCY > 1 restores bounded
-    concurrent submission (heaviest-first, minimizing makespan) for
-    wall-clock-focused runs where line-item fidelity doesn't matter.
+    really is warm when the parent runs (ADVICE r14 #2).
 
     Returns the names attempted; a touch that raises is skipped (its
     queries will build reactively, exactly the pre-r12 behavior) so one
@@ -290,23 +237,16 @@ def prebuild_all(
     (logging.warning: name, type, message — ADVICE r12 #2) and the
     failed names are collected in ``failures`` for the bench record."""
     import logging
-    import os
-    import threading
-
-    from data_pipeline_playground_spark.concurrency import run_concurrently
 
     fns = touch_fns()
     failed: list[str] = []
-    limit = max(
-        1, int(os.environ.get("SPARK_GRAFT_PREBUILD_CONCURRENCY", "1"))
-    )
 
     def _weight(name: str) -> float:
         return _SOLO_WEIGHTS.get(name, _DEFAULT_WEIGHT)
 
-    def _build(name: str, fn: TouchFn) -> None:
+    for name in _serial_order(list(fns), _weight):
         try:
-            fn(spark, sf_dir)
+            fns[name](spark, sf_dir)
         except Exception as exc:  # noqa: BLE001 — reactive fallback
             logging.getLogger(__name__).warning(
                 "memo prebuild %r failed, reverting to "
@@ -314,23 +254,6 @@ def prebuild_all(
                 name, type(exc).__name__, exc,
             )
             failed.append(name)
-
-    if limit == 1:
-        # serial, lightest-first with children before parents
-        for name in _serial_order(list(fns), _weight):
-            _build(name, fns[name])
-    else:
-        slots = threading.BoundedSemaphore(limit)
-
-        def _safe(name: str, fn: TouchFn):
-            def run():
-                with slots:
-                    _build(name, fn)
-
-            return run
-
-        heaviest_first = sorted(fns, key=lambda n: (-_weight(n), n))
-        run_concurrently([_safe(n, fns[n]) for n in heaviest_first])
     if failures is not None:
         failures.extend(sorted(failed))
     return [n for n in sorted(fns) if n not in failed]

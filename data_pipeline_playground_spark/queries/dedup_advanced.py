@@ -1278,8 +1278,8 @@ _SAMPLE_MULT = 1327217885  # ≈ P · (golden ratio − 1)
 # keep 1/4 of docs -> ~1/16 of truth-join work. Raised 2 -> 4 in r9 on
 # the theory that the PPJoin truth join dominated; round-10 MEASUREMENT
 # refuted that theory: K=2 -> 4 moved the clean timings only ~20%
-# (5.58/4.62 s -> 4.44/3.77 s, BENCH_local_r10a, fresh — no
-# pre-rewrite min-merge), and a stage decomposition at sf0.1 shows the
+# (5.58/4.62 s -> 4.44/3.77 s, the round-10 bench record committed in
+# 3f77243, measured fresh), and a stage decomposition at sf0.1 shows the
 # cost is the SERIAL doc-linear machinery, not pair work: sampled
 # tokenize+shingle scan ~0.5 s, 64-permutation signature aggregate
 # ~0.5 s, band/cand/est joins ~0.7 s, truth-side rank/prefix/verify

@@ -1,7 +1,7 @@
 """Pure-logic tests for bench.py's contention-window bookkeeping.
 
-No SparkSession: these pin the window→name mapping that both in-run
-and cross-run self-heal rely on. Getting an interval boundary wrong
+No SparkSession: these pin the window→name mapping that the in-run
+self-heal relies on. Getting an interval boundary wrong
 silently re-runs the wrong queries (or none), so the mapping is
 pinned here exactly like a plan invariant.
 """
@@ -49,55 +49,6 @@ def test_hot_window_subset_rerun_maps_onto_subset():
     assert clean == set()
 
 
-def test_contaminated_prefers_still_hot_record():
-    base = {
-        "queries": {n: 1.0 for n in ORDER},
-        "still_hot": ["qc", "qd"],
-        "errors": {"qz": "boom"},
-        # probe data that would flag a much wider window if consulted
-        "sentinel_probes": {"0": 9.9},
-        "probe_names": {"0": "qa"},
-    }
-    assert bench._contaminated_names(base) == {"qc", "qd", "qz"}
-
-
-def test_contaminated_healed_clean_run_reruns_nothing():
-    base = {
-        "queries": {n: 1.0 for n in ORDER},
-        "still_hot": [],
-        "sentinel_probes": {"0": 9.9},  # pass-1 probes were hot...
-        "probe_names": {"0": "qa"},  # ...but healing cleared them
-    }
-    assert bench._contaminated_names(base) == set()
-
-
-def test_contaminated_legacy_positional_fallback():
-    base = {
-        "queries": {n: 1.0 for n in ORDER},
-        "sentinel_probes": {"0": 0.5, "5": 3.0, "10": 0.5, "15": 0.5},
-        # no probe_names → legacy positional windows [5-5, 5+5)
-    }
-    assert bench._contaminated_names(base) == set(ORDER[0:10])
-
-def test_merge_keeps_min_of_base_and_rerun():
-    # a burst during the heal re-run must not overwrite a cleaner base
-    timings = {"qa": 18.4, "qb": 0.9}
-    bench._merge_base_timings(
-        timings, {}, {"qa": 2.1, "qb": 1.5, "qc": 0.7}, {"qa", "qb", "qc"}
-    )
-    assert timings == {"qa": 2.1, "qb": 0.9, "qc": 0.7}
-
-
-def test_merge_drops_unregistered_and_errored():
-    # qd no longer registered; qe errored this run → no stale timing
-    timings = {"qa": 1.0}
-    errors = {"qe": "Boom"}
-    bench._merge_base_timings(
-        timings, errors, {"qd": 3.0, "qe": 2.0, "qa": 1.2}, {"qa", "qe"}
-    )
-    assert timings == {"qa": 1.0}
-
-
 def test_compact_summary_fits_tail_capture_worst_case():
     """VERDICT r7 #1: the stdout line must be a complete JSON object
     inside any ~2000-char tail capture, even for a large registry with
@@ -107,11 +58,14 @@ def test_compact_summary_fits_tail_capture_worst_case():
 
     queries = {f"a_very_long_query_name_number_{i:04d}": i * 0.017
                for i in range(1000)}
+    # env-supplied strings at their worst too: a ~2 KB full-record
+    # path and an sf that fell back to a whole directory path
+    full_path = "/x/" + "deep_dir/" * 220 + "BENCH_full.json"
     out = {
         "metric": "total_query_wall_seconds",
         "value": round(sum(queries.values()), 4),
         "unit": "sec",
-        "sf": 0.1,
+        "sf": "/y/" + "testdata_dir/" * 40 + "parquet",
         "queries": queries,
         "sentinel_probes": {str(i * 10): 0.6 for i in range(100)},
         "still_hot": sorted(queries)[:300],
@@ -119,12 +73,10 @@ def test_compact_summary_fits_tail_capture_worst_case():
         "contention_warning": "sentinel queries exceeded idle-box "
         "bounds (section_rank_topk=42.5s; 300 queries never measured "
         "in a clean window); host was likely CPU-throttled",
-        "merged_from": "BENCH_local_prev.json",
-        "rerun_queries": sorted(queries)[:60],
         "families": {f"family_{i:02d}": i * 1.7 for i in range(30)},
     }
     line = json.dumps(
-        bench._compact_summary(out, "/root/repo/BENCH_full_latest.json"),
+        bench._compact_summary(out, full_path),
         separators=(",", ":"),
     )
     assert len(line) <= 1500
@@ -137,101 +89,6 @@ def test_compact_summary_fits_tail_capture_worst_case():
     if parsed["queries"]:
         worst = max(queries, key=queries.get)
         assert worst in parsed["queries"]
-
-def test_merge_fresh_queries_skip_base_min():
-    """ADVICE r9 #1: a rewritten query must NOT take min(base, rerun) —
-    the base timing measured different code. Non-fresh re-runs keep the
-    one-sided-noise min policy unchanged."""
-    timings = {"rewritten": 5.0, "unchanged": 3.0}
-    bench._merge_base_timings(
-        timings, {},
-        {"rewritten": 1.2, "unchanged": 2.0, "untouched": 0.7},
-        {"rewritten", "unchanged", "untouched"},
-        fresh={"rewritten"},
-    )
-    # fresh keeps ITS OWN timing even though base was faster
-    assert timings == {"rewritten": 5.0, "unchanged": 2.0, "untouched": 0.7}
-
-
-def test_merge_keeps_memo_build_entries():
-    """VERDICT r10 #1: memo_build:* pseudo-entries from a base record
-    survive the merge (min policy — same-code builds measure the same
-    work) even though they are not registered query names; fresh-listed
-    memo entries keep this run's own value. Round 12 (ADVICE r11 #1):
-    a base memo entry whose memo name is not in the known-memo registry
-    (renamed/removed) is DROPPED instead of riding the merge chain
-    forever."""
-    known = frozenset({"minhash_est", "pq_model", "tfidf_features"})
-    timings = {"qa": 1.0, "memo_build:minhash_est": 4.0}
-    bench._merge_base_timings(
-        timings, {},
-        {"qa": 1.2, "memo_build:minhash_est": 3.1,
-         "memo_build:pq_model": 0.8, "memo_build:tfidf_features": 2.0,
-         "memo_build:renamed_away": 7.7},
-        {"qa"},
-        fresh={"memo_build:tfidf_features"},
-        known_memos=known,
-    )
-    assert timings == {
-        "qa": 1.0,
-        "memo_build:minhash_est": 3.1,  # min(4.0, 3.1)
-        "memo_build:pq_model": 0.8,  # filled from base
-        # memo_build:tfidf_features: fresh → base value not merged,
-        # and this run recorded none
-        # memo_build:renamed_away: not a known memo → stale, dropped
-    }
-
-
-def test_merge_memo_allowlist_carries_explicit_names():
-    """$SPARK_GRAFT_BENCH_MEMO_KEEP semantics: a deliberately carried
-    memo name merges even though the registry no longer lists it."""
-    timings = {}
-    bench._merge_base_timings(
-        timings, {}, {"memo_build:legacy_keep": 1.5}, set(),
-        known_memos=frozenset({"legacy_keep"}),
-    )
-    assert timings == {"memo_build:legacy_keep": 1.5}
-
-
-def test_merge_memo_fingerprint_gates_base_entries():
-    """ADVICE r12 #1: a base memo_build entry min-merges only when the
-    base record's builder fingerprint matches the current one — a
-    changed builder (or a legacy base with no fingerprints) drops the
-    stale timing instead of relying on a manual FRESH listing. Names
-    outside the fingerprint map (the explicit KEEP allowlist) merge as
-    before."""
-    known = frozenset({"same", "changed", "legacy", "keep_name"})
-    fps = {"same": "aaa", "changed": "bbb-new", "legacy": "ccc"}
-    timings = {"memo_build:changed": 9.0}
-    bench._merge_base_timings(
-        timings, {},
-        {"memo_build:same": 1.0, "memo_build:changed": 0.5,
-         "memo_build:legacy": 2.0, "memo_build:keep_name": 3.0},
-        set(),
-        known_memos=known,
-        memo_fps=fps,
-        base_memo_fps={"same": "aaa", "changed": "bbb-old"},
-    )
-    assert timings == {
-        "memo_build:same": 1.0,      # fp match → filled from base
-        "memo_build:changed": 9.0,   # fp mismatch → base 0.5 dropped
-        # memo_build:legacy: base carries no fp for it → dropped
-        "memo_build:keep_name": 3.0,  # outside fp map (allowlist) → merges
-    }
-
-
-def test_memo_fingerprints_cover_registry():
-    """Every registered memo gets a fingerprint; fingerprints are
-    stable within a process (same source → same hash)."""
-    from data_pipeline_playground_spark import memo_prebuild
-
-    fps = memo_prebuild.memo_fingerprints()
-    assert set(fps) == set(memo_prebuild.known_memo_names())
-    assert all(
-        isinstance(v, str) and len(v) == 12 for v in fps.values()
-    )
-    assert fps == memo_prebuild.memo_fingerprints()
-
 
 def test_prebuild_failure_logged_and_surfaced(monkeypatch, caplog):
     """ADVICE r12 #2: a touch that raises is logged (name, type,
@@ -292,9 +149,6 @@ def test_union_seconds_clipped_to_query_window():
         {"name": "a", "kind": "remat", "sec": 9.0, "t0": 0.0, "t1": 9.0},
     ]
     assert abs(bench._union_seconds(entries, 5.0, 8.0) - 3.0) < 1e-9
-    # legacy entries without timestamps still contribute, capped
-    legacy = [{"name": "b", "kind": "build", "sec": 99.0}]
-    assert abs(bench._union_seconds(legacy, 5.0, 8.0) - 3.0) < 1e-9
 
 
 def test_compact_summary_memo_entries_counted_separately():
@@ -323,57 +177,6 @@ def test_compact_summary_memo_entries_counted_separately():
     assert "memo_build:minhash_est" in parsed["queries"]  # slowest item
 
 
-def test_load_base_follows_compact_summary(tmp_path):
-    """VERDICT r9 #7: a compact stdout summary passed as
-    SPARK_GRAFT_BENCH_BASE must follow its full_record pointer so
-    contamination detection runs on the full record, not on 10
-    un-vetted top-K timings."""
-    import json
-
-    full = {"queries": {"qa": 1.0, "qb": 2.0}, "still_hot": ["qb"],
-            "sentinel_probes": {"0": 0.5}}
-    full_path = tmp_path / "full.json"
-    full_path.write_text(json.dumps(full))
-    summary = {"metric": "total_query_wall_seconds", "value": 3.0,
-               "queries": {"qb": 2.0}, "queries_elided": 1,
-               "full_record": str(full_path)}
-    sum_path = tmp_path / "summary.json"
-    sum_path.write_text(json.dumps(summary))
-    base = bench._load_base(str(sum_path))
-    assert base["queries"] == {"qa": 1.0, "qb": 2.0}
-    assert bench._contaminated_names(base) == {"qb"}
-
-
-def test_load_base_resolves_shrunk_record_path(tmp_path):
-    """ADVICE r9 #2: the summary's full_record may have been
-    basename-shrunk by the byte budget — resolve it relative to the
-    summary file's directory instead of crashing."""
-    import json
-
-    full = {"queries": {"qa": 1.0}, "still_hot": []}
-    (tmp_path / "full.json").write_text(json.dumps(full))
-    summary = {"queries": {"qa": 1.0}, "queries_elided": 0,
-               "full_record": "full.json"}  # basename only
-    sum_path = tmp_path / "summary.json"
-    sum_path.write_text(json.dumps(summary))
-    base = bench._load_base(str(sum_path))
-    assert base["still_hot"] == []
-
-
-def test_load_base_degrades_to_summary_when_record_gone(tmp_path):
-    """ADVICE r9 #2: a truncated/deleted full_record must degrade to
-    the compact summary itself (re-run everything outside its top-K),
-    not raise FileNotFoundError."""
-    import json
-
-    summary = {"queries": {"qa": 1.0}, "queries_elided": 5,
-               "full_record": "BENCH_full_lat"}  # truncated, gone
-    sum_path = tmp_path / "summary.json"
-    sum_path.write_text(json.dumps(summary))
-    base = bench._load_base(str(sum_path))
-    assert base["queries"] == {"qa": 1.0}  # summary itself
-
-
 def test_compact_summary_truncates_huge_env_paths():
     """VERDICT r9 #7 / ADVICE r9 #3: env-supplied strings — a 2 KB
     SPARK_GRAFT_BENCH_OUT path AND an sf that fell back to the whole
@@ -386,7 +189,7 @@ def test_compact_summary_truncates_huge_env_paths():
         "metric": "total_query_wall_seconds", "value": 1.0,
         "unit": "sec", "sf": "/y/" + "testdata_dir/" * 160 + "parquet",
         "queries": {f"q{i}": 0.1 for i in range(50)},
-        "sentinel_probes": {}, "merged_from": huge_path,
+        "sentinel_probes": {},
     }
     line = json.dumps(bench._compact_summary(out, huge_path),
                       separators=(",", ":"))
@@ -405,7 +208,6 @@ def test_compact_summary_numeric_sf_never_shrunk():
         "unit": "sec", "sf": 0.1,
         "queries": {f"q{i}": 0.1 for i in range(50)},
         "sentinel_probes": {},
-        "merged_from": "/x/" + "d/" * 900 + "b.json",
     }
     parsed = bench._compact_summary(out, "/x/" + "d/" * 900 + "f.json")
     assert parsed["sf"] == 0.1
@@ -413,10 +215,10 @@ def test_compact_summary_numeric_sf_never_shrunk():
 
 
 def test_prebuild_serial_order_lightest_first(monkeypatch):
-    """Round 14 (VERDICT r13 #3): at the default concurrency of 1 the
-    prebuild runs builds serially, lightest-first by the solo-weight
-    table — booked exclusive seconds then approach the solo floor on
-    any box, and cheap builds warm shared scans before heavy ones."""
+    """Round 14 (VERDICT r13 #3): the prebuild runs builds serially,
+    lightest-first by the solo-weight table — booked exclusive seconds
+    then approach the solo floor on any box, and cheap builds warm
+    shared scans before heavy ones."""
     from data_pipeline_playground_spark import memo_prebuild
 
     order: list[str] = []
@@ -435,7 +237,6 @@ def test_prebuild_serial_order_lightest_first(monkeypatch):
         memo_prebuild, "_SOLO_WEIGHTS",
         {"heavy": 10.0, "light": 0.5, "mid": 3.0},
     )
-    monkeypatch.delenv("SPARK_GRAFT_PREBUILD_CONCURRENCY", raising=False)
     prebuilt = memo_prebuild.prebuild_all(None, "/nonexistent")
     assert order == ["light", "mid", "heavy"]
     assert prebuilt == ["heavy", "light", "mid"]  # names, sorted
@@ -443,9 +244,9 @@ def test_prebuild_serial_order_lightest_first(monkeypatch):
 
 def test_bench_records_lsh_planes_mode():
     """ADVICE r13 #2: the effective LSH plane configuration is a
-    recorded bench field so cross-run merges can fresh-list the
-    similarity family when the config changed; with no env pin the
-    mode is 'derived'."""
+    recorded bench field (configuration provenance: it changes what
+    the similarity family computes); with no env pin the mode is
+    'derived'."""
     import os
 
     from data_pipeline_playground_spark.queries import similarity
