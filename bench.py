@@ -38,16 +38,14 @@ transients of a few minutes were observed mid-run in r5/r6):
 Memo attribution (VERDICT r10 #1): session-shared memo artifacts
 (caching.py) made per-query numbers ORDER-DEPENDENT — whichever query
 first touched the shared MinHash memo paid its build (driver booked
-corpus_funnel at 14.35 s where the memo-exclusive cost is ~6 s), and
-after each between-query clearCache every later toucher re-paid the
-re-materialization. caching.memo times every build and re-mat into a
-drainable ledger; the bench drains it after each timed query,
-SUBTRACTS the memo seconds from that query's wall time, and books
-builds to visible "memo_build:<name>" pseudo-entries in the queries
-map (they count toward "value"). Re-materializations — an artifact of
-the bench's own clearCache, not of any plan — are reported separately
-under "memo_remat_s" and excluded from "value": a real long-lived
-session pays each memo once.
+corpus_funnel at 14.35 s where the memo-exclusive cost is ~6 s).
+caching.memo times every build into a drainable ledger; the bench
+drains it after each timed query, SUBTRACTS the memo seconds from
+that query's wall time, and books builds to visible
+"memo_build:<name>" pseudo-entries in the queries map (they count
+toward "value"). Memo pins are localCheckpoints, which the bench's
+between-query clearCache does not drop, so each memo is paid once —
+as in a real long-lived session.
 
 Round-12 refinements:
 - PREBUILD (VERDICT r11 #3): memo_prebuild.py is now a static registry
@@ -58,9 +56,9 @@ Round-12 refinements:
   builds no longer serialize inside the timed loop on first touch,
   where driver-phase box contention inflated them (r11 booked
   memo_build:minhash_est at 22.1 s vs 3.4 s clean). The ledger
-  subtraction stays: the per-query re-mat contamination the bench's
-  own clearCache causes can only be stripped reactively.
-- OVERLAP-SAFE SUBTRACTION (ADVICE r11 #2): memos build/re-mat in
+  subtraction stays for any memo whose prebuild failed and so builds
+  on first touch.
+- OVERLAP-SAFE SUBTRACTION (ADVICE r11 #2): memos build in
   concurrent driver threads (the sampled-audit pred/truth overlap), so
   summing the ledger's per-thread exclusive seconds can exceed the
   wall-clock the memos actually occupied; the per-query subtraction now
@@ -120,7 +118,7 @@ def _hot_window_names(probes: dict[str, float], probe_names: dict[str, str],
 def _union_seconds(entries: list[dict], lo: float, hi: float) -> float:
     """Total length of the union of the entries' [t0, t1] intervals,
     clipped to [lo, hi] — the wall-clock a query actually spent inside
-    memo builds/re-mats, immune to concurrent-thread double-counting
+    memo builds, immune to concurrent-thread double-counting
     (ADVICE r11 #2)."""
     ivs = sorted(
         (max(e["t0"], lo), min(e["t1"], hi))
@@ -169,23 +167,16 @@ def main() -> None:
     queries = all_queries()
 
     # memo attribution accumulators (module docstring, VERDICT r10 #1):
-    # builds become "memo_build:<name>" line items in the queries map;
-    # re-materializations (a clearCache artifact) are reported aside.
+    # builds become "memo_build:<name>" line items in the queries map
     memo_build: dict[str, float] = {}
-    memo_remat: dict[str, float] = {}
     # wall seconds by which concurrent builds' exclusive sums exceeded
     # their interval union — surfaced, never double-subtracted
     memo_overlap = [0.0]
 
     def _book_ledger(entries: list[dict]) -> None:
         for e in entries:
-            if e["kind"] == "build":
-                k = f"memo_build:{e['name']}"
-                memo_build[k] = memo_build.get(k, 0.0) + e["sec"]
-            else:
-                memo_remat[e["name"]] = (
-                    memo_remat.get(e["name"], 0.0) + e["sec"]
-                )
+            k = f"memo_build:{e['name']}"
+            memo_build[k] = memo_build.get(k, 0.0) + e["sec"]
 
     # Configuration provenance: the effective LSH plane mode (pinned vs
     # derived changes what the whole similarity family computes per
@@ -239,12 +230,11 @@ def main() -> None:
             if q_idx % _PROBE_EVERY == 0:
                 probe(q_idx)
             # Drop any cached data left by the previous query so each
-            # timing is independent of run order. Memoized frames
-            # (caching.py) that a later query retrieves are
-            # re-materialized at that retrieval; the ledger drain below
-            # strips that cost (and first-touch builds) back OUT of the
-            # query's number, so run order neither subsidizes nor
-            # penalizes a timing (VERDICT r10 #1).
+            # timing is independent of run order (memo pins are
+            # localCheckpoints and survive this). The ledger drain below
+            # strips any first-touch memo build back OUT of the query's
+            # number, so run order neither subsidizes nor penalizes a
+            # timing (VERDICT r10 #1).
             spark.catalog.clearCache()
             caching.drain_ledger()  # discard stray entries (warmup/probes)
             start = time.perf_counter()
@@ -340,13 +330,6 @@ def main() -> None:
     }
     if errors:
         out["errors"] = errors
-    if memo_remat:
-        # clearCache-artifact seconds stripped from query timings and
-        # NOT counted in "value" (a long-lived session pays each memo
-        # once — the build line items above)
-        out["memo_remat_s"] = {
-            k: round(v, 3) for k, v in sorted(memo_remat.items())
-        }
     if memo_overlap[0] > 0.05:
         # concurrent builds' exclusive-second sum exceeded their wall
         # union by this much (work done in parallel threads) — visible

@@ -1,80 +1,72 @@
 """Session-aware memo cache for reused DataFrames/models.
 
-Cached frames are bound to the SparkSession that built them; a driver
+Memoized frames are bound to the SparkSession that built them; a caller
 that opens a fresh session per phase (smoke → correctness → bench)
 must never receive a frame whose session has been stopped. Keys
 therefore include the Spark application id + session hash.
 
-Concurrency: builds are serialized per key (ADVICE r10 #2) — driver
-threads that race ``memo()`` on the same (session, name, sf_dir) key
-block on one lock and the loser gets the winner's value; different
-keys build concurrently (the _audit_builds_sampled overlap pattern is
-unaffected).
+Concurrency: builds are serialized per key (ADVICE r10 #2) — threads
+racing ``memo()`` on one key block on its lock and the loser gets the
+winner's value; different keys build concurrently.
 
-Instrumentation (VERDICT r10 #1): every build and every
-re-materialization is timed and appended to a process-wide ledger so
-the bench can charge memo costs to visible ``memo_build:<name>``
-line items instead of whichever query happened to touch the memo
-first — first-touch accounting made the driver book ``corpus_funnel``
-at 14.35 s where the memo-exclusive cost is ~6 s. Nested memo builds
-(e.g. ``minhash_est_sampled`` building on the ``grams_sampled`` memo)
-record EXCLUSIVE time: a child's elapsed time is subtracted from its
-parent's entry, so draining the ledger never double-counts a second.
+Instrumentation (VERDICT r10 #1): every build is timed and appended
+to a process-wide ledger so the bench can charge memo costs to visible
+``memo_build:<name>`` line items instead of whichever query happened
+to touch the memo first — first-touch accounting once booked
+``corpus_funnel`` at 14.35 s where the memo-exclusive cost is ~6 s.
+Nested memo builds (e.g. ``minhash_est_sampled`` building on the
+``grams_sampled`` memo) record EXCLUSIVE time: a child's elapsed time
+is subtracted from its parent's entry, so draining the ledger never
+double-counts a second.
 
-Failure story at cluster scale (VERDICT r14 #5): the shared artifacts
-are pinned with ``localCheckpoint`` — correct and cheap in local mode
-(this bench's grading configuration), but localCheckpoint blocks live
-only in executor storage: on a real cluster an executor loss discards
-its blocks and FAILS every job over the memoized frame (Spark cannot
-recompute a truncated lineage). The cluster profile for this fabric is
-a RELIABLE artifact store instead: ``spark.sparkContext
-.setCheckpointDir`` on durable storage + ``DataFrame.checkpoint``, or
-persisting each memo as a table keyed on (input snapshot, builder
-fingerprint) — same memo surface, one-rebuild recovery
-instead of job loss. None of the performance claims depend on the
-local-mode choice; swapping the pin mechanism changes no plan shape
-above the checkpoint scan.
+Failure story at cluster scale (VERDICT r14 #5): every memo builder
+pins its frames with ``localCheckpoint(eager=True)``. That is correct
+and cheap in local mode, but the blocks live only in executor storage:
+on a real cluster an executor loss FAILS every job over the memoized
+frame (Spark cannot recompute a truncated lineage). The cluster
+profile is a reliable artifact store instead — ``DataFrame.checkpoint``
+under a durable ``setCheckpointDir``, or one table per memo keyed on
+(input snapshot, builder fingerprint): the same memo surface, one
+rebuild instead of job loss, and no plan change above the checkpoint
+scan.
 """
 
 from __future__ import annotations
 
-import logging
 import threading
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 _STORE: dict[tuple, Any] = {}
-_LOG = logging.getLogger(__name__)
-
 _STORE_LOCK = threading.Lock()
 _KEY_LOCKS: dict[tuple, threading.Lock] = {}
 
-# ledger of {"name", "kind": "build"|"remat", "sec", "t0", "t1"}
-# entries; "sec" is per-thread EXCLUSIVE seconds (child memo time
-# already subtracted) for per-name cost attribution, while t0/t1 are
-# the region's absolute perf_counter bounds so the bench can subtract
-# the UNION of busy intervals from a query's wall time — concurrent
-# driver-thread builds overlap, and summing their exclusive seconds
-# would over-subtract (ADVICE r11 #2). Appends are GIL-atomic; the
-# bench drains it after each timed query.
+# ledger of {"name", "kind": "build", "sec", "t0", "t1"} entries
+# ("kind" is always "build"; perfbench still splits on it). "sec" is
+# per-thread EXCLUSIVE seconds (child memo time already subtracted)
+# for per-name attribution; t0/t1 are the region's absolute
+# perf_counter bounds, so the bench can subtract the UNION of busy
+# intervals from a query's wall time — summing concurrent builds'
+# exclusive seconds would over-subtract (ADVICE r11 #2). Appends are
+# GIL-atomic; the bench drains it after each timed query.
 _LEDGER: list[dict] = []
 _ACTIVE = threading.local()  # per-thread stack of child-time accumulators
 
 
 def drain_ledger() -> list[dict]:
-    """Return-and-clear the build/re-materialization ledger."""
+    """Return-and-clear the build ledger."""
     global _LEDGER
     out, _LEDGER = _LEDGER, []
     return out
 
 
 class _charged:
-    """Time a memo build/remat region, recording EXCLUSIVE seconds."""
+    """Time a memo build region, recording EXCLUSIVE seconds."""
 
-    def __init__(self, name: str, kind: str):
-        self.name, self.kind = name, kind
+    def __init__(self, name: str):
+        self.name = name
 
     def __enter__(self):
         stack = getattr(_ACTIVE, "stack", None)
@@ -93,7 +85,7 @@ class _charged:
             stack[-1] += elapsed
         _LEDGER.append({
             "name": self.name,
-            "kind": self.kind,
+            "kind": "build",
             "sec": round(max(0.0, elapsed - child), 4),
             "t0": self.t0,
             "t1": t1,
@@ -110,75 +102,19 @@ def _session_key(spark: SparkSession) -> tuple:
 
 
 def memo(spark: SparkSession, name: str, sf_dir: str, build) -> Any:
-    """Return the cached value for (session, name, sf_dir), building it
-    with ``build()`` on first use.
+    """The value for (session, name, sf_dir), built once by ``build()``.
 
-    DataFrames that the builder `.cache()`d are defensively
-    re-materialized on retrieval if something explicitly unpersisted
-    them since — the bench's ``spark.catalog.clearCache()`` between
-    queries, or a stray ``unpersist()``: a multi-reference consumer
-    plan over a memoized-but-uncached frame would otherwise silently
-    re-run the expensive build subtree once PER reference — the
-    failure mode that turned a 3 s query into minutes. (Scope note:
-    ``df.is_cached`` reflects the catalog/CacheManager entry, which
-    survives executor *block eviction* under memory pressure — blocks
-    evicted that way recompute-and-recache lazily on next access via
-    Spark's own lineage machinery, so only the explicit-unpersist case
-    needs this guard.) Memo values that are tuples/lists of DataFrames
-    (model bundles like ``(features, vocab, n)``) get the same
-    per-element treatment. Frames the builder deliberately left
-    uncached are untouched.
+    Builders pin every DataFrame they return with
+    ``localCheckpoint(eager=True)``: the blocks live outside the
+    CacheManager, so a ``spark.catalog.clearCache()`` (the bench runs
+    one between queries) or a stray ``unpersist()`` cannot drop them,
+    and a hit is a dictionary read — never a rebuild.
     """
     key = (_session_key(spark), name, sf_dir)
     with _STORE_LOCK:
         lock = _KEY_LOCKS.setdefault(key, threading.Lock())
     with lock:
         if key not in _STORE:
-            with _charged(name, "build"):
-                value = build()
-                flags = _cached_flags(value)
-            _STORE[key] = (value, flags)
-        value, flags = _STORE[key]
-        for elem, was_cached in zip(_elements(value), flags):
-            if was_cached and not _is_cached(elem):
-                try:
-                    with _charged(name, "remat"):
-                        elem.cache()
-                        elem.count()  # eager re-materialization, once
-                except Exception as exc:  # noqa: BLE001 — best-effort
-                    # A failed re-cache reverts to recompute-per-reference
-                    # (correct, just slower); a real analysis error in the
-                    # frame will surface at the consumer. Log so a genuine
-                    # build error is visible at the memo site, not deferred
-                    # silently to an arbitrary later consumer.
-                    _LOG.warning(
-                        "memo(%s): re-materialization failed (%s: %s)",
-                        name,
-                        type(exc).__name__,
-                        exc,
-                    )
-    return value
-
-
-def _elements(value: Any) -> tuple:
-    """The DataFrames governed by the re-materialization guard."""
-    if isinstance(value, (tuple, list)):
-        return tuple(v for v in value if isinstance(v, DataFrame))
-    return (value,) if isinstance(value, DataFrame) else ()
-
-
-def _cached_flags(value: Any) -> tuple:
-    return tuple(_is_cached(v) for v in _elements(value))
-
-
-def _is_cached(value: Any) -> bool:
-    # NOT ``df.is_cached``: that is a client-side Python attribute only
-    # ever flipped by the same object's cache()/unpersist() calls, so
-    # ``spark.catalog.clearCache()`` leaves it True and the guard would
-    # never fire (the round-3 implementation had exactly this bug).
-    # ``df.storageLevel`` queries the JVM CacheManager for the plan.
-    try:
-        lvl = value.storageLevel
-        return bool(lvl.useMemory or lvl.useDisk)
-    except Exception:
-        return False
+            with _charged(name):
+                _STORE[key] = build()
+    return _STORE[key]

@@ -8,12 +8,13 @@ touched a memo first paid its build into the ledger mid-loop).
 
 This module is that list. Each entry maps a memo name to a TOUCH
 callable ``(spark, sf_dir) -> Any`` — calling it runs the memo's
-build() (builds are eager: the builders cache()+count() inside), so
-``prebuild_all`` can construct every memo up front, serially and
-children before parents, before the bench's timed loop; the ledger
-entries it leaves behind are booked to the same ``memo_build:<name>``
-line items as before, and the timed loop then sees only
-re-materializations (a clearCache artifact, reported aside).
+build() (builds are eager: the builders pin with
+``localCheckpoint(eager=True)``), so ``prebuild_all`` can construct
+every memo up front, serially and children before parents, before the
+bench's timed loop; the ledger entries it leaves behind are booked to
+the same ``memo_build:<name>`` line items as before, and the timed
+loop then sees no memo cost at all (``clearCache`` cannot drop a
+checkpointed pin).
 
 Completeness is pinned by ``tests/test_caching.py``: a source scan for
 ``memo(spark, "<name>"`` / ``memo_key="<name>"`` literals must yield

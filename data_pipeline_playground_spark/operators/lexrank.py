@@ -3,11 +3,11 @@ re-implemented natively: TF-IDF vectors → cosine-similarity graph →
 damped power-iteration centrality → per-group top-k).
 
 The reference refit LexRank per HTTP request over a handful of texts;
-here the whole computation is DataFrame-parallel: the similarity graph
-is a term-keyed equi-join (inverted index, not all-pairs), and each
-power-iteration step is one join+aggregate over the edge list. At
-100 TB the edge list is the only super-linear object, and it is bounded
-per group by the similarity threshold.
+here the corpus-wide TF-IDF weights are DataFrame-parallel, and the
+graph work is one shuffle by group: each group's cosine matrix,
+threshold and power iteration run as dense numpy in applyInPandas.
+Each group must fit one executor (clusters/sections, the reference's
+shape); ``group_cap`` bounds groups whose size grows with the corpus.
 """
 
 from __future__ import annotations
@@ -22,127 +22,13 @@ N_ITER = 8
 SIM_EDGE_THRESHOLD = 0.10
 
 
-def tfidf_unit_vectors(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """(doc, term, weight) rows, L2-normalized per doc.
-
-    Smooth-idf TF-IDF (reference cluster.py:25-30): tf * (ln((N+1)/(df+1))+1),
-    then w / sqrt(Σ w² per doc) via a window — no ml.Vector, stays SQL.
-    """
-    tok = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokenize(F.col(text_col))).alias("term"))
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.select(F.countDistinct(id_col).alias("n_docs"))
-    # df_ carries one row per DISTINCT TERM — vocabulary-sized, which
-    # grows with the corpus, so it must NOT be hint-broadcast (round-13
-    # third-decade find: the forced broadcast made the grouped-LexRank
-    # stage read exponent 1.95 at 1.5M docs; 91.8 → 33.8 s with the
-    # hint removed). AQE still converts to broadcast at runtime when
-    # the measured df_ is small, so bounded-vocab plans are unchanged.
-    w = (
-        tf.join(df_, "term")
-        .join(F.broadcast(n))
-        .withColumn("w", F.col("tf") * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0))
-    )
-    norm_w = Window.partitionBy("doc_id")
-    return (
-        w.withColumn("norm", F.sqrt(F.sum(F.col("w") * F.col("w")).over(norm_w)))
-        .select("doc_id", "term", (F.col("w") / F.col("norm")).alias("w"))
-    )
-
-
-def similarity_edges(vectors: DataFrame, groups: DataFrame) -> DataFrame:
-    """Within-group cosine edges ≥ threshold, as (group, src, dst, sim).
-
-    Inverted-index join on term: cost ∝ Σ_term df², not n² — the 100 TB
-    shape (rare terms dominate; a df cap can bound hubs if needed).
-    """
-    v = vectors.join(groups, "doc_id")
-    a = v.select(F.col("group").alias("g"), F.col("doc_id").alias("src"),
-                 F.col("term").alias("t"), F.col("w").alias("wa"))
-    b = v.select(F.col("group").alias("g2"), F.col("doc_id").alias("dst"),
-                 F.col("term").alias("t2"), F.col("w").alias("wb"))
-    return (
-        a.join(b, (F.col("t") == F.col("t2")) & (F.col("g") == F.col("g2"))
-               & (F.col("src") != F.col("dst")))
-        .groupBy(F.col("g").alias("group"), "src", "dst")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("sim"))
-        .filter(F.col("sim") >= SIM_EDGE_THRESHOLD)
-    )
-
-
-def lexrank_scores(edges: DataFrame, members: DataFrame) -> DataFrame:
-    """Damped power iteration over the row-normalized similarity graph.
-
-    score_i = d/N_g + (1-d) * Σ_j (sim_ji / deg_j) * score_j, per group.
-    N_ITER fixed-point steps; edges are cached once, every step is a
-    single broadcast-free join + aggregate keyed on the graph.
-    """
-    # All self-lineage joins use renamed columns to avoid ambiguous
-    # attribute resolution (deg/trans/scores all derive from edges).
-    deg = edges.groupBy(
-        F.col("group").alias("dgroup"), F.col("src").alias("dsrc")
-    ).agg(F.sum("sim").alias("deg"))
-    trans = (
-        edges.join(
-            deg,
-            (F.col("group") == F.col("dgroup")) & (F.col("src") == F.col("dsrc")),
-        )
-        .select("group", "src", "dst", (F.col("sim") / F.col("deg")).alias("p"))
-    ).cache()
-    sizes = members.groupBy(F.col("group").alias("zgroup")).agg(
-        F.count(F.lit(1)).alias("n_g")
-    )
-    base = members.join(
-        sizes, F.col("group") == F.col("zgroup")
-    ).select("group", "doc_id", "n_g").cache()
-    scores = base.select(
-        "group", "doc_id", (F.lit(1.0) / F.col("n_g")).alias("score")
-    )
-    for _iter in range(N_ITER):
-        prev = scores.select(
-            F.col("group").alias("sgroup"),
-            F.col("doc_id").alias("sdoc"),
-            F.col("score").alias("sval"),
-        )
-        contrib = (
-            trans.join(
-                prev,
-                (F.col("src") == F.col("sdoc")) & (F.col("group") == F.col("sgroup")),
-            )
-            .groupBy(
-                F.col("group").alias("cgroup"), F.col("dst").alias("cdoc")
-            )
-            .agg(F.sum(F.col("p") * F.col("sval")).alias("csum"))
-        )
-        scores = (
-            base.join(
-                contrib,
-                (F.col("group") == F.col("cgroup")) & (F.col("doc_id") == F.col("cdoc")),
-                "left",
-            )
-            .select(
-                "group",
-                "doc_id",
-                (
-                    F.lit(DAMPING) / F.col("n_g")
-                    + F.lit(1.0 - DAMPING) * F.coalesce(F.col("csum"), F.lit(0.0))
-                ).alias("score"),
-            )
-        )
-        # truncate lineage mid-run: 8 nested join plans make Catalyst
-        # re-optimization super-linear (~40% of wall time at sf0.1)
-        if (_iter + 1) % 4 == 0 and _iter + 1 < N_ITER:
-            scores = scores.localCheckpoint(eager=True)
-    return scores
-
-
 def tfidf_term_weights(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
                        tok: DataFrame | None = None) -> DataFrame:
-    """(doc, term, w) smooth-idf weights, NOT normalized — the input to
-    the grouped fast path, which L2-normalizes per doc in-block (same
-    semantics as tfidf_unit_vectors minus its window shuffle).
+    """(doc, term, w) smooth-idf weights (reference cluster.py:25-30:
+    tf * (ln((N+1)/(df+1))+1)), NOT normalized — the input to the
+    grouped paths, which L2-normalize per doc in-block instead of
+    paying a per-doc window shuffle.
 
     ``tok``: optional pre-exploded (doc_id, term) rows — pass the
     pipeline's cached tokenization to avoid re-tokenizing the corpus
@@ -156,9 +42,12 @@ def tfidf_term_weights(docs: DataFrame, text_col: str = "text",
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.select(F.countDistinct(id_col).alias("n_docs"))
-    # no broadcast hint on the vocabulary-sized df_ — see
-    # tfidf_unit_vectors (round-13 third-decade find; AQE broadcasts
-    # small vocabularies at runtime anyway)
+    # df_ carries one row per DISTINCT TERM — vocabulary-sized, which
+    # grows with the corpus, so it must NOT be hint-broadcast (round-13
+    # third-decade find: the forced broadcast made the grouped-LexRank
+    # stage read exponent 1.95 at 1.5M docs; 91.8 → 33.8 s with the
+    # hint removed). AQE still converts to broadcast at runtime when
+    # the measured df_ is small, so bounded-vocab plans are unchanged.
     return (
         tf.join(df_, "term")
         .join(F.broadcast(n))
@@ -216,7 +105,7 @@ def _apply_group_cap(groups: DataFrame, group_cap: int,
 
 def _term_matrix(pdf):
     """(sorted ids, dense doc×term weight matrix) from one group's
-    (doc_id, term, w) rows — the pivot every grouped fast path starts
+    (doc_id, term, w) rows — the pivot every grouped path starts
     from. Built with factorize + np.add.at instead of pandas
     pivot_table (measured ~25% off the whole applyInPandas stage at
     sf0.1; pivot_table's generic agg machinery dominates small groups).
@@ -247,17 +136,17 @@ def lexrank_scores_grouped(weights: DataFrame, groups: DataFrame,
                            id_type: str = "bigint",
                            group_cap: int | None = None,
                            cap_observation=None) -> DataFrame:
-    """Bounded-group LexRank fast path: one shuffle by group, then the
-    whole pipeline (L2 normalize → cosine matrix → threshold → damped
-    power iteration) runs as dense numpy per group via applyInPandas
-    (the per-group model-fitting shape SURVEY §2.11 prescribes).
+    """Bounded-group LexRank: one shuffle by group, then the whole
+    pipeline (L2 normalize → cosine matrix → threshold → damped power
+    iteration) runs as dense numpy per group via applyInPandas (the
+    per-group model-fitting shape SURVEY §2.11 prescribes).
 
-    Identical spec to similarity_edges + lexrank_scores — same smooth-idf
-    weights, threshold, damping, iteration count; float summation order
-    differs (BLAS vs join-agg), which rows-only checks permit. Use this
-    when every group fits one executor's memory (clusters/sections, the
-    reference's shape: a cluster is ~tens of articles); the DataFrame
-    power iteration remains the unbounded-group path.
+    score_i = d/N_g + (1-d) * Σ_j (sim_ji / deg_j) * score_j per group,
+    over cosine edges ≥ SIM_EDGE_THRESHOLD, for N_ITER fixed-point
+    steps. Float summation follows BLAS order, which rows-only checks
+    permit. Every group must fit one executor's memory
+    (clusters/sections, the reference's shape: a cluster is ~tens of
+    articles) — see ``group_cap`` for callers whose groups grow.
 
     ``group_cap`` (round 12 — the 100× probe found the unbounded
     failure mode): the dense per-group work is O(members²) memory in
@@ -309,11 +198,11 @@ def lexrank_scores_grouped(weights: DataFrame, groups: DataFrame,
 
 def similarity_edges_grouped(weights: DataFrame, groups: DataFrame,
                              top_m: int | None = None) -> DataFrame:
-    """Within-group cosine edge list (src < dst, sim ≥ threshold) via the
-    bounded-group fast path: one shuffle by group, then dense numpy per
-    block — same spec as similarity_edges (L2-normalize → cosine →
-    threshold) without the inverted-index join's Σ df² blowup. Feeds
-    graph algorithms that want an explicit edge list (PIC, components).
+    """Within-group cosine edge list (src < dst, sim ≥ threshold): one
+    shuffle by group, then dense numpy per block (L2-normalize → cosine
+    → threshold, the same spec as lexrank_scores_grouped's graph).
+    Feeds graph algorithms that want an explicit edge list (PIC,
+    components).
 
     ``top_m``: optional kNN sparsification — keep each node's top-m
     strongest neighbors (union-symmetrized, deterministic tie-break on
@@ -419,7 +308,7 @@ def lexrank_sentence_summaries(docs: DataFrame, groups: DataFrame,
 
     Pipeline: split docs into sentences (UDTF) → sentence-level
     smooth-idf TF-IDF over the whole corpus → per-group cosine graph +
-    damped power iteration (grouped fast path, one shuffle) → top-k
+    damped power iteration (grouped path, one shuffle) → top-k
     sentences per group in rank order, space-joined.
 
     ``groups``: (doc_id, group) — every doc's sentences inherit its
@@ -428,7 +317,7 @@ def lexrank_sentence_summaries(docs: DataFrame, groups: DataFrame,
 
     ``sents``/``weights``: optional prebuilt sentence rows (from
     ``sentence_rows``) and sid-keyed TF-IDF weights — pass both to
-    share one cached fit across several summary queries (the memoized
+    share one pinned fit across several summary queries (the memoized
     artifacts in queries/ml.py); omitted, they are built here.
 
     ``group_cap``: caps the DOCS per group feeding the sentence graph

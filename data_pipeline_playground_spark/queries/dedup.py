@@ -59,17 +59,12 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_playground_spark.caching import memo
 
     def build():
-        # eager count (round 12): with the bench's memo PREBUILD, a
-        # lazily-cached memo's first real materialization would land
-        # on the retrieval path and be booked as an excluded clearCache
-        # "remat" (observed: 9.1 s of D1 spec-tier cost vanishing from
-        # the bench headline). Counting here keeps the banded-join cost
-        # in the visible memo_build:dedup_fuzzy_survivors line item.
-        surv = fuzzy_dedup_survivors(
+        # pinned eagerly: the banded-join cost stays in the visible
+        # memo_build:dedup_fuzzy_survivors line item instead of landing
+        # on whichever query first reads the survivors
+        return fuzzy_dedup_survivors(
             table(spark, sf_dir, "documents"), text_col="text", id_col="doc_id"
-        ).cache()
-        surv.count()
-        return surv
+        ).localCheckpoint(eager=True)
 
     return memo(spark, "dedup_fuzzy_survivors", sf_dir, build)
 

@@ -108,32 +108,16 @@ def _minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build():
         docs = table(spark, sf_dir, "documents")
-        # cache the wide signature table (one short row per doc): bands
-        # self-join + the two est joins would otherwise re-run the
-        # CPU-heavy shingle+hash fold four times; materialize eagerly —
-        # within a single action the self-join branches race the cache
-        sig = signatures(spark, shingle_hashes(docs)).cache()
-        sig.count()
+        # pin the wide signature table (one short row per doc): the
+        # bands self-join + the two est joins would otherwise re-run
+        # the CPU-heavy shingle+hash fold four times. est is pinned
+        # too, so its whole cost lands in memo_build:minhash_est —
+        # every registered consumer reads est, no sig-only one exists
+        sig = signatures(spark, shingle_hashes(docs)).localCheckpoint(eager=True)
         cand = candidate_pairs(band_keys(sig))
-        # memoize (sig, est), not est alone: caching.memo's
-        # re-materialization guard only restores frames it can SEE.
-        # After the bench's clearCache, a guard that re-counted est
-        # while sig was uncached re-ran the shingle+hash fold once per
-        # sig reference in the est plan (~3-4×, measured ~12.6 s vs
-        # ~2.3 s steady at sf0.1); listing sig first re-caches it
-        # before est's rebuild touches it. est is counted EAGERLY
-        # (ADVICE r11 #4 closed the r10 lazy asymmetry): every
-        # registered consumer reads est — no sig-only consumer exists
-        # — so lazy est only deferred its materialization into the
-        # first consumer's timed region (un-attributed), and the memo
-        # retrieval path re-counted it after every clearCache anyway.
-        # Eager build keeps the whole cost in memo_build:<name> where
-        # the bench's prebuild pass (round 12) charges it once.
-        est = estimated_similarity(cand, sig).cache()
-        est.count()
-        return sig, est
+        return estimated_similarity(cand, sig).localCheckpoint(eager=True)
 
-    return memo(spark, "minhash_est", sf_dir, build)[1]
+    return memo(spark, "minhash_est", sf_dir, build)
 
 
 def _grams_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,7 +142,7 @@ def _grams_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from data_pipeline_playground_spark.functions.text import word_ngrams
 
-        g = (
+        return (
             docs.repartition(shuffle_n)
             .select(
                 "doc_id",
@@ -166,23 +150,21 @@ def _grams_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
                     word_ngrams(tokenize(F.col("text")), SHINGLE_N)
                 ).alias("sh"),
             )
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        g.count()
-        return g
 
     return memo(spark, "grams_sampled", sf_dir, build)
 
 
 def _audit_builds_sampled(spark: SparkSession, sf_dir: str, threshold):
     """(pred_est, truth_pairs) for a sampled audit tier, with the two
-    independent eager cache materializations submitted CONCURRENTLY
+    independent eager memo builds submitted CONCURRENTLY
     via concurrency.run_concurrently (Spark schedules jobs from
     separate driver threads side by side — the builds are independent
-    stages over the shared cached grams frame, so overlapping them
+    stages over the shared pinned grams frame, so overlapping them
     converts ~0.9 s of serial wall-clock into max() of the two). The
     shared grams memo is built FIRST, serially, so both sides start
-    from the materialized cache; memo's per-key lock makes even a
+    from the pinned frame; memo's per-key lock makes even a
     same-key race build-once in any case."""
     from data_pipeline_playground_spark.concurrency import run_concurrently
 
@@ -211,16 +193,12 @@ def _minhash_est_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashes = _grams_sampled(spark, sf_dir).select(
             "doc_id", rolling_hash(F.col("sh")).alias("h")
         )
-        sig = signatures(spark, hashes).cache()
-        sig.count()
+        sig = signatures(spark, hashes).localCheckpoint(eager=True)
         cand = candidate_pairs(band_keys(sig))
-        # (sig, est) so the memo guard restores sig BEFORE est rebuilds;
-        # est eager for the same attribution reason — see _minhash_est
-        est = estimated_similarity(cand, sig).cache()
-        est.count()
-        return sig, est
+        # est pinned for the same attribution reason — see _minhash_est
+        return estimated_similarity(cand, sig).localCheckpoint(eager=True)
 
-    return memo(spark, "minhash_est_sampled", sf_dir, build)[1]
+    return memo(spark, "minhash_est_sampled", sf_dir, build)
 
 
 @query("dedup_minhash_pairs", oracle=_MINHASH_PAIRS_SQL)
@@ -530,14 +508,11 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_playground_spark.caching import memo
 
-    # (sh, pairs) with sh FIRST so the memo guard re-caches the
-    # fingerprint frame before a pairs re-materialization re-reads it
-    # 5× (the _minhash_est pattern)
     return memo(spark, "simhash_pairs", sf_dir,
-                lambda: _simhash_pairs_build(spark, sf_dir))[1]
+                lambda: _simhash_pairs_build(spark, sf_dir))
 
 
-def _simhash_pairs_build(spark: SparkSession, sf_dir: str):
+def _simhash_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-≤K pair enumeration at DISTINCT-FINGERPRINT grain
     (round 12 — the second-decade scale probe's find).
 
@@ -558,8 +533,8 @@ def _simhash_pairs_build(spark: SparkSession, sf_dir: str):
     identical to the doc-grain builder on the 10× probe corpus
     (3,788,016 pairs, byte-equal), 14× faster at 100× (25.6 s vs
     362.6 s, exponent 1.70 → 0.68)."""
-    sh = _simhash_frame(spark, sf_dir).cache()
-    sh.count()
+    # pinned: the pair build below reads the fingerprint frame 5×
+    sh = _simhash_frame(spark, sf_dir).localCheckpoint(eager=True)
     fp = sh.select("simhash").distinct()
     kcols = [f"b{k}" for k in range(MATCH_BLOCKS)]
     bp = spark.createDataFrame(
@@ -612,9 +587,7 @@ def _simhash_pairs_build(spark: SparkSession, sf_dir: str):
         .filter(F.col("cj") < F.col("ci"))
         .select("ci", "cj", F.lit(0).cast("integer").alias("hamming"))
     )
-    pairs = within.union(cross).cache()
-    pairs.count()
-    return sh, pairs
+    return within.union(cross).localCheckpoint(eager=True)
 
 
 @query("dedup_simhash_pairs", oracle=_SIMHASH_PAIRS_SQL)
@@ -645,7 +618,7 @@ def _shingle_hash_ex(spark: SparkSession, sf_dir: str,
                      doc_pred=None,
                      memo_key: str = "shingle_hash_ex") -> DataFrame:
     """Distinct (doc_id, xxhash64(shingle)) table — memoized: shared by
-    the Jaccard and containment tiers, cached because every consumer's
+    the Jaccard and containment tiers, pinned because every consumer's
     plan references it 3+ times (gdf, prefix, verify).
 
     Shingles build via posexplode + lead windows (whole-stage codegen,
@@ -658,19 +631,17 @@ def _shingle_hash_ex(spark: SparkSession, sf_dir: str,
 
     def build():
         if doc_pred is _doc_sample_pred:
-            # the sampled audit tiers: derive from the shared cached
+            # the sampled audit tiers: derive from the shared pinned
             # grams scan instead of a second tokenize+shingle pass —
             # identical shingle strings (both are space-joined
             # consecutive-token n-grams), distinct applies after the
             # hash projection exactly as below
-            ex = (
+            return (
                 _grams_sampled(spark, sf_dir)
                 .select("doc_id", F.xxhash64("sh").alias("sh"))
                 .distinct()
-                .cache()
+                .localCheckpoint(eager=True)
             )
-            ex.count()
-            return ex
         docs = table(spark, sf_dir, "documents")
         if doc_pred is not None:
             docs = docs.where(doc_pred(F.col("doc_id")))
@@ -684,18 +655,14 @@ def _shingle_hash_ex(spark: SparkSession, sf_dir: str,
             *(["tok"] + [F.lead("tok", i).over(w_lead)
                          for i in range(1, SHINGLE_N)]),
         )
-        ex = (
+        # pinned eagerly: consumers branch off ex inside one action
+        return (
             toks.select("doc_id", F.when(lead2.isNotNull(), gram).alias("g"))
             .filter(F.col("g").isNotNull())
             .select("doc_id", F.xxhash64("g").alias("sh"))
             .distinct()
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        # materialize eagerly: consumers branch off ex inside one action
-        # and would otherwise race the lazy cache, re-running the
-        # shingle build per branch
-        ex.count()
-        return ex
 
     return memo(spark, memo_key, sf_dir, build)
 

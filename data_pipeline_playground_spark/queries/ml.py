@@ -47,7 +47,7 @@ _MIN_ROWS_PER_TASK = 64
 
 
 def _spread_for_transform(df: DataFrame, n_rows: int) -> DataFrame:
-    """Round 15 (guide §2, VERDICT r14 #1): the cached corpus frames
+    """Round 15 (guide §2, VERDICT r14 #1): the pinned corpus frames
     arrive as ONE scan partition at bench SFs, so every MLlib
     ``model.transform`` over them ran serially no matter the core
     count — the measured face of lda_doc_topics' 0.23 anti-scaling
@@ -100,14 +100,14 @@ def _tfidf_features_memo(spark: SparkSession, sf_dir: str):
     """Corpus TF-IDF features, fitted once per (session, sf_dir) —
     KMeans, BisectingKMeans and the dedup-free ML paths all featurize
     the identical documents table, so the two fits (CountVectorizer,
-    IDF) and the cached feature frame are shared. Returns
+    IDF) and the pinned feature frame are shared. Returns
     (features_df, vocabulary, n_docs)."""
     from data_pipeline_playground_spark.caching import memo
 
     def build():
         toks = _tokens_df(spark, sf_dir)
         feats, vocab = _tfidf_features(toks)
-        feats = feats.cache()
+        feats = feats.localCheckpoint(eager=True)
         return (feats, vocab, feats.count())
 
     return memo(spark, "tfidf_features", sf_dir, build)
@@ -147,9 +147,9 @@ def _lda_fit(spark: SparkSession, sf_dir: str):
 
         toks = _tokens_df(spark, sf_dir)
         cv_model = CountVectorizer(inputCol="tokens", outputCol="features").fit(toks)
-        # cached BEFORE the fit: online VB samples the corpus every
-        # iteration — uncached, each pass replays tokenize+CV transform
-        bow = cv_model.transform(toks).cache()
+        # pinned BEFORE the fit: online VB samples the corpus every
+        # iteration — unpinned, each pass replays tokenize+CV transform
+        bow = cv_model.transform(toks).localCheckpoint(eager=True)
         n = bow.count()
         k = max(2, min(n // 5, 10))
         # maxIter=5 (vs 10 in rounds 2-4; reference gensim passes=50 on
@@ -189,7 +189,7 @@ def lda_doc_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.functions import vector_to_array
 
     _, model, bow = _lda_fit(spark, sf_dir)
-    # bow is cached, so the count is a metadata-cheap job; the fit
+    # bow is pinned, so the count is a metadata-cheap job; the fit
     # above keeps the ORIGINAL bow (see _spread_for_transform).
     pred = model.transform(_spread_for_transform(bow, bow.count()))
     arr = vector_to_array("topicDistribution")
@@ -237,14 +237,12 @@ def _doc_weights_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-level smooth-idf term weights over `documents`, built once
     per (session, sf_dir): lexrank_representatives and
     power_iteration_clusters consume the identical (doc_id, term, w)
-    frame, so the tokenize+TF-IDF subtree and its cache are shared."""
+    frame, so the tokenize+TF-IDF subtree and its pin are shared."""
     from data_pipeline_playground_spark.caching import memo
 
     def build():
         docs = table(spark, sf_dir, "documents")
-        w = tfidf_term_weights(docs).cache()
-        w.count()
-        return w
+        return tfidf_term_weights(docs).localCheckpoint(eager=True)
 
     return memo(spark, "lexrank_doc_weights", sf_dir, build)
 
@@ -259,14 +257,12 @@ def _sentence_artifacts_memo(spark: SparkSession, sf_dir: str):
 
     def build():
         docs = table(spark, sf_dir, "documents")
-        sents = sentence_rows(docs).cache()
-        sents.count()
+        sents = sentence_rows(docs).localCheckpoint(eager=True)
         weights = tfidf_term_weights(
             sents.select(
                 F.col("sid").alias("doc_id"), F.col("sentence").alias("text")
             )
-        ).cache()
-        weights.count()
+        ).localCheckpoint(eager=True)
         return (sents, weights)
 
     return memo(spark, "lexrank_sentence_artifacts", sf_dir, build)
@@ -319,11 +315,9 @@ def power_iteration_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lexrank_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LexRank centrality top-3 per source group (reference N10: LexRank
     over each cluster's texts/titles, head(3) at reddit_api.py:148-149).
-    Source groups are bounded (≤ a few hundred docs), so this uses the
-    grouped fast path: corpus-wide smooth-idf weights, then per-group
-    cosine graph + 8 power-iteration steps in one applyInPandas pass
-    (operators/lexrank.py keeps the all-DataFrame power iteration for
-    unbounded groups)."""
+    Source groups are bounded (≤ a few hundred docs), so the grouped
+    path fits: corpus-wide smooth-idf weights, then per-group cosine
+    graph + 8 power-iteration steps in one applyInPandas pass."""
     docs = table(spark, sf_dir, "documents")
     groups = docs.select("doc_id", F.col("source").alias("group"))
     weights = _doc_weights_memo(spark, sf_dir)

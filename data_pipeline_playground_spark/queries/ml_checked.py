@@ -111,15 +111,12 @@ def _km_refined_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("cid", "i")
             .agg(F.round(F.avg("x"), 5).alias("val"))
         )
-        c1 = cd.groupBy("cid").agg(
+        return cd.groupBy("cid").agg(
             F.expr(
                 "transform(array_sort(collect_list(named_struct"
                 "('i', i, 'val', val))), s -> s.val)"
             ).alias("c")
-        )
-        c1 = c1.cache()
-        c1.count()
-        return c1
+        ).localCheckpoint(eager=True)
 
     return memo(spark, "kmeans_checked_centroids", sf_dir, build)
 
@@ -132,12 +129,9 @@ def _kmeans_checked_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         e = _embed_double(spark, sf_dir)
         c1 = _km_refined_centroids(spark, sf_dir)
-        a1 = _km_assign(e, c1).select(
+        return _km_assign(e, c1).select(
             "vec_id", "label", F.col("cid").alias("cluster_id"), "d2"
-        )
-        a1 = a1.cache()
-        a1.count()
-        return a1
+        ).localCheckpoint(eager=True)
 
     return memo(spark, "kmeans_checked_model", sf_dir, build)
 

@@ -218,7 +218,7 @@ def _doc_shingles_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
         shuffle_n = int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
-        ex = (
+        return (
             docs.repartition(shuffle_n)
             .select(
                 "doc_id",
@@ -226,10 +226,8 @@ def _doc_shingles_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
                     word_ngrams(tokenize(F.col("text")), SHINGLE_N)
                 ).alias("g"),
             )
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        ex.count()
-        return ex
 
     return memo(spark, "doc_shingles", sf_dir, build)
 

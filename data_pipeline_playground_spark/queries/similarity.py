@@ -1146,8 +1146,8 @@ def _pq_model(spark: SparkSession, sf_dir: str):
                 )
             ).alias("s"),
         ).select("vec_id", F.col("s.m").alias("m"), F.col("s.sub").alias("sub"))
-        sub = sub.cache()
-        sub.count()  # eager: four consumers branch off within one action
+        # eager: four consumers branch off within one action
+        sub = sub.localCheckpoint(eager=True)
         c0 = sub.filter(
             (F.col("vec_id") >= PQ_SEED_LO) & (F.col("vec_id") < PQ_SEED_HI)
         ).select("m", (F.col("vec_id") - PQ_SEED_LO).alias("cid"),
@@ -1193,8 +1193,7 @@ def _pq_model(spark: SparkSession, sf_dir: str):
                 "('i', i, 'val', val))), s -> s.val)"
             ).alias("c")
         )
-        codes = assign(c1).select("vec_id", "m", "cid").cache()
-        codes.count()
+        codes = assign(c1).select("vec_id", "m", "cid").localCheckpoint(eager=True)
         return c1, codes, sub
 
     return memo(spark, "pq_model", sf_dir, build)

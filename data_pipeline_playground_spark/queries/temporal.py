@@ -154,24 +154,21 @@ def events_rollup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is ~5 orders of magnitude smaller than raw, so the day pass
     is nearly free. Decimal partials make re-aggregation exact, which
     is why hour→day equals the oracle's direct day-from-raw. The hour
-    frame is cached: it feeds both output branches.
+    frame is pinned: it feeds both output branches.
     """
     ev = table(spark, sf_dir, "events")
 
     def build():
-        # eager count — same rationale as dedup_fuzzy_survivors: keep
-        # the first materialization in the memo_build line item rather
-        # than an excluded retrieval-path remat (round 12).
-        h = (
+        # pinned eagerly, so the first materialization is booked to the
+        # memo_build line item (same rationale as dedup_fuzzy_survivors)
+        return (
             ev.groupBy(F.date_trunc("hour", "ts").alias("bucket_start"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(_dec6("value")).alias("value_part"),
             )
-            .cache()
+            .localCheckpoint(eager=True)
         )
-        h.count()
-        return h
 
     hour = memo(spark, "rollup_hour_partials", sf_dir, build)
     day = hour.groupBy(

@@ -5,7 +5,11 @@
 One section per query: what to look for in the plan (pushdown line,
 broadcast exchange, TakeOrderedAndProject, ...) followed by the actual
 `.explain("formatted")` output, so plan-quality claims in SCALE.md are
-checkable against committed evidence.
+checkable against committed evidence. Memo builders pin with
+``localCheckpoint``, so a memo consumer's plan shows only the
+checkpoint scan; the plan of every frame pinned while a query's plan
+is built (the memos it is the first to touch) follows that query's
+plan.
 """
 
 from __future__ import annotations
@@ -25,8 +29,11 @@ SHOWCASE = [
      "lineitem scan's ReadSchema carries only the 3 needed columns; "
      "top-k is TakeOrderedAndProject."),
     ("dedup_minhash_pairs", "LSH candidates come from an equi-join on "
-     "(band, bkey) — a SortMergeJoin/ShuffledHashJoin on band keys, "
-     "never a cartesian: shuffle size tracks candidates, not n²."),
+     "(band, bkey) — broadcast at small scale, a SortMergeJoin/"
+     "ShuffledHashJoin on band keys at scale, never a cartesian: "
+     "shuffle size tracks candidates, not n². The "
+     "join runs in the minhash_est memo build (its pinned frames "
+     "follow); the query itself is a filter over the checkpoint scan."),
     ("bm25_topk", "token stream filtered to query terms BEFORE the "
      "(doc,term) aggregate; df + corpus stats broadcast; final rank is "
      "TakeOrderedAndProject — no global sort, no window."),
@@ -127,9 +134,10 @@ SHOWCASE = [
      "no Python."),
     ("lsh_s_curve_audit_sampled", "the production audit tier: the "
      "golden-ratio sample predicate sits in the Filter directly over "
-     "BOTH document scans (truth and LSH sides), so every downstream "
-     "stage — shingles, signatures, PPJoin truth — runs on the "
-     "sub-corpus; joins stay equi, windows stay partitioned."),
+     "BOTH document scans (truth and LSH sides) of the sampled memo "
+     "builds (their pinned frames follow), so every downstream stage "
+     "— shingles, signatures, PPJoin truth — runs on the sub-corpus; "
+     "joins stay equi, windows stay partitioned."),
 ]
 
 
@@ -153,12 +161,31 @@ def main() -> None:
         "output; tests/test_plans.py asserts the same properties in CI.",
         "",
     ]
-    for name, claim in SHOWCASE:
-        df = queries[name](spark, args.sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+
+    def formatted(df) -> str:
+        return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
-        out += [f"## {name}", "", claim, "", "```", plan.rstrip(), "```", ""]
+        ).rstrip()
+
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame
+    pin = frame_cls.localCheckpoint
+    pinned: list[str] = []
+
+    def recording_pin(self, *args, **kwargs):
+        pinned.append(formatted(self))
+        return pin(self, *args, **kwargs)
+
+    frame_cls.localCheckpoint = recording_pin
+    try:
+        for name, claim in SHOWCASE:
+            pinned.clear()
+            plan = formatted(queries[name](spark, args.sf_dir))
+            out += [f"## {name}", "", claim, "", "```", plan, "```", ""]
+            for i, build in enumerate(pinned, 1):
+                out += [f"### {name}: pinned frame {i} of {len(pinned)}",
+                        "", "```", build, "```", ""]
+    finally:
+        frame_cls.localCheckpoint = pin
 
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"

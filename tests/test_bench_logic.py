@@ -146,7 +146,7 @@ def test_union_seconds_clipped_to_query_window():
     never exceed elapsed — the over-subtraction clamp is structural,
     not a max(0.001, ...) fig leaf."""
     entries = [
-        {"name": "a", "kind": "remat", "sec": 9.0, "t0": 0.0, "t1": 9.0},
+        {"name": "a", "kind": "build", "sec": 9.0, "t0": 0.0, "t1": 9.0},
     ]
     assert abs(bench._union_seconds(entries, 5.0, 8.0) - 3.0) < 1e-9
 

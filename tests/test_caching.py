@@ -1,12 +1,13 @@
 """Unit tests for the session-aware memo cache (caching.py).
 
-Pins the round-3 verdict item: the re-materialization guard must cover
-DataFrames nested inside tuple memo values (the TF-IDF ``(feats,
-vocab, n)`` and PQ model bundles), not just bare-DataFrame values.
+Every memo builder pins its frames with ``localCheckpoint(eager=True)``,
+so a memo is built once per (session, name, sf_dir) and a
+``clearCache()`` neither drops it nor triggers a rebuild.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark import caching
@@ -17,10 +18,9 @@ def _build_counter(spark):
 
     def build():
         calls["n"] += 1
-        df = spark.range(10).select(F.col("id"), (F.col("id") * 2).alias("v"))
-        df.cache()
-        df.count()
-        return df
+        return spark.range(10).select(
+            F.col("id"), (F.col("id") * 2).alias("v")
+        ).localCheckpoint(eager=True)
 
     return build, calls
 
@@ -31,46 +31,6 @@ def test_memo_returns_same_value_and_builds_once(spark, sf_dir):
     b = caching.memo(spark, "t_memo_once", sf_dir, build)
     assert a is b
     assert calls["n"] == 1
-
-
-def test_memo_rematerializes_bare_frame_after_clearcache(spark, sf_dir):
-    build, _ = _build_counter(spark)
-    df = caching.memo(spark, "t_memo_bare", sf_dir, build)
-    assert caching._is_cached(df)
-    spark.catalog.clearCache()
-    assert not caching._is_cached(df)  # is_cached would still lie True here
-    df2 = caching.memo(spark, "t_memo_bare", sf_dir, build)
-    assert df2 is df
-    assert caching._is_cached(df2)  # guard re-cached it
-
-
-def test_memo_rematerializes_frames_inside_tuple_values(spark, sf_dir):
-    def build():
-        feats = spark.range(5).select("id", (F.col("id") + 1).alias("f"))
-        feats.cache()
-        feats.count()
-        vocab = spark.range(3).select("id")
-        vocab.cache()
-        vocab.count()
-        return (feats, vocab, 3)
-
-    feats, vocab, n = caching.memo(spark, "t_memo_tuple", sf_dir, build)
-    assert n == 3 and caching._is_cached(feats) and caching._is_cached(vocab)
-    spark.catalog.clearCache()
-    assert not caching._is_cached(feats) and not caching._is_cached(vocab)
-    feats2, vocab2, _ = caching.memo(spark, "t_memo_tuple", sf_dir, build)
-    assert feats2 is feats and vocab2 is vocab
-    assert caching._is_cached(feats2), "tuple frame must be re-materialized"
-    assert caching._is_cached(vocab2), "every frame must be re-materialized"
-
-
-def test_memo_leaves_deliberately_uncached_frames_alone(spark, sf_dir):
-    def build():
-        return spark.range(7)  # builder chose not to cache
-
-    df = caching.memo(spark, "t_memo_uncached", sf_dir, build)
-    caching.memo(spark, "t_memo_uncached", sf_dir, build)
-    assert not caching._is_cached(df)
 
 
 def test_memo_nondataframe_values_pass_through(spark, sf_dir):
@@ -126,9 +86,10 @@ def test_global_rank_retires_old_caches_fifo(spark):
 
 
 def test_memo_ledger_records_build_and_remat(spark, sf_dir):
-    """VERDICT r10 #1: memo charges builds/re-materializations to a
-    drainable ledger so the bench can book them as memo_build line
-    items instead of whichever query touched the memo first."""
+    """VERDICT r10 #1: memo charges builds to a drainable ledger so the
+    bench can book them as memo_build line items instead of whichever
+    query touched the memo first. A read after clearCache is a plain
+    hit: the localCheckpoint pin survives it, so there is no remat."""
     caching.drain_ledger()
     build, _ = _build_counter(spark)
     caching.memo(spark, "t_memo_ledger", sf_dir, build)
@@ -140,13 +101,10 @@ def test_memo_ledger_records_build_and_remat(spark, sf_dir):
     # cache hit: no new entries
     caching.memo(spark, "t_memo_ledger", sf_dir, build)
     assert caching.drain_ledger() == []
-    # explicit unpersist → retrieval re-materializes and records it
+    # clearCache cannot drop a localCheckpoint pin: still no entries
     spark.catalog.clearCache()
     caching.memo(spark, "t_memo_ledger", sf_dir, build)
-    entries = caching.drain_ledger()
-    assert [(e["name"], e["kind"]) for e in entries] == [
-        ("t_memo_ledger", "remat")
-    ]
+    assert caching.drain_ledger() == []
 
 
 def test_memo_ledger_nested_builds_record_exclusive_time(spark, sf_dir):
@@ -198,38 +156,6 @@ def test_memo_concurrent_same_key_builds_once(spark, sf_dir):
     assert all(r is results[0] for r in results)
 
 
-def test_minhash_est_memoizes_signature_table_for_the_guard(spark, sf_dir):
-    """The minhash estimate memo must store (sig, est), sig FIRST.
-
-    The guard only restores frames it can see: memoizing est alone left
-    the builder's internal signature cache unrestorable after a
-    clearCache, so est's re-materialization re-ran the shingle+hash
-    fold once per sig reference in its plan (~3-4x, measured 12.6 s vs
-    2.3 s steady at sf0.1 — the cost landed on whichever query touched
-    the memo first, corpus_funnel in bench order)."""
-    from data_pipeline_playground_spark.queries.dedup_advanced import (
-        _minhash_est,
-    )
-
-    est = _minhash_est(spark, sf_dir)
-    assert {"ci", "cj", "sim"} <= set(est.columns)
-    key = (caching._session_key(spark), "minhash_est", sf_dir)
-    value, flags = caching._STORE[key]
-    assert isinstance(value, tuple) and len(value) == 2
-    sig, est_stored = value
-    assert est_stored is est
-    # sig must be listed FIRST so the guard re-caches it before est's
-    # rebuild re-reads it, and both must be guard-covered (cached)
-    assert flags == (True, True)
-    assert "doc_id" in sig.columns  # the wide per-doc signature table
-    spark.catalog.clearCache()
-    assert not caching._is_cached(sig) and not caching._is_cached(est)
-    est2 = _minhash_est(spark, sf_dir)
-    assert est2 is est
-    assert caching._is_cached(sig), "guard must restore the sig cache"
-    assert caching._is_cached(est2)
-
-
 def test_memo_ledger_entries_carry_interval_timestamps(spark, sf_dir):
     """ADVICE r11 #2: every ledger entry carries the region's absolute
     [t0, t1] bounds so the bench subtracts the UNION of busy intervals
@@ -273,9 +199,11 @@ def test_memo_prebuild_registry_matches_source_scan():
 
 def test_prebuild_all_covers_every_memo_build(spark, sf_dir):
     """prebuild_all must leave a build ledger entry for EVERY registered
-    memo name (nested builds included), and a registered query touched
-    afterwards must trigger no further builds — the bench's timed loop
-    then sees only clearCache re-materializations."""
+    memo name (nested builds included) and must pin through
+    localCheckpoint only — nothing in the CacheManager. A clearCache
+    afterwards must change nothing: touching every memo and registered
+    query again records no ledger entry (no rebuild, no remat), and
+    every memoized frame keeps its order-free content hash."""
     from data_pipeline_playground_spark import memo_prebuild
     from data_pipeline_playground_spark.registry import all_queries
 
@@ -292,12 +220,34 @@ def test_prebuild_all_covers_every_memo_build(spark, sf_dir):
     want = set(memo_prebuild.known_memo_names())
     assert set(prebuilt) == want, "a touch raised — check stderr"
     assert built >= want, f"never built: {want - built}"
-    # touching the memo families again builds nothing new
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        "a memo builder pinned with .cache() instead of localCheckpoint"
+    )
+
+    def frame_hashes() -> dict:
+        out = {}
+        for (k, name, _sf), value in caching._STORE.items():
+            if k != skey:
+                continue
+            elems = value if isinstance(value, (tuple, list)) else (value,)
+            for i, df in enumerate(elems):
+                if isinstance(df, DataFrame):
+                    out[name, i] = tuple(df.agg(
+                        F.count(F.lit(1)),
+                        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+                    ).first())
+        return out
+
+    before = frame_hashes()
+    spark.catalog.clearCache()
+    for touch in memo_prebuild.touch_fns().values():
+        touch(spark, sf_dir)
     q = all_queries()
     for name in ("dedup_minhash_pairs", "dedup_jaccard_pairs",
                  "dedup_simhash_pairs", "events_rollup_hierarchical"):
         q[name](spark, sf_dir)
-    assert [e for e in caching.drain_ledger() if e["kind"] == "build"] == []
+    assert caching.drain_ledger() == []
+    assert frame_hashes() == before
 
 
 def test_prebuild_serial_order_children_before_parents():

@@ -15,6 +15,11 @@ from data_pipeline_playground_spark.registry import all_queries
 
 _QUERIES = all_queries()
 
+# the memos the exact audit tiers read: the truth side's shingle and
+# exact-Jaccard memos and the LSH side's signatures
+_AUDIT_MEMOS = {"minhash_est", "shingle_hash_ex", "shingle_ranked",
+                "shingle_sets", "jaccard_pairs_wide"}
+
 
 def _plan(spark, sf_dir, name: str) -> str:
     return (
@@ -23,6 +28,48 @@ def _plan(spark, sf_dir, name: str) -> str:
         .executedPlan()
         .toString()
     )
+
+
+def _memo_build_plans(spark, monkeypatch, memo_names, run) -> list[str]:
+    """Executed plans of every frame pinned while ``run()`` rebuilds the
+    named memos. A memo pins with localCheckpoint, so its consumers'
+    plans show only the checkpoint scan; the build plan is visible only
+    at pin time."""
+    from data_pipeline_playground_spark import caching
+
+    skey = caching._session_key(spark)
+    evicted = [k for k in caching._STORE
+               if k[0] == skey and k[1] in memo_names]
+    for key in evicted:
+        del caching._STORE[key]
+    plans: list[str] = []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame
+    pin = frame_cls.localCheckpoint
+
+    def recording_pin(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return pin(self, *args, **kwargs)
+
+    with monkeypatch.context() as patch:
+        patch.setattr(frame_cls, "localCheckpoint", recording_pin)
+        run()
+    # every named memo was rebuilt under the recording, so no build
+    # plan escaped the caller's assertions
+    rebuilt = {k[1] for k in caching._STORE if k[0] == skey}
+    assert set(memo_names) <= rebuilt, set(memo_names) - rebuilt
+    assert plans
+    return plans
+
+
+def _plan_and_builds(spark, sf_dir, monkeypatch, name, memo_names):
+    """(consumer plan, joined build plans) of query ``name``, rebuilding
+    the named memos it reads (see ``_memo_build_plans``)."""
+    consumer: list[str] = []
+    builds = _memo_build_plans(
+        spark, monkeypatch, memo_names,
+        lambda: consumer.append(_plan(spark, sf_dir, name)),
+    )
+    return consumer[0], "\n".join(builds)
 
 
 def test_pricing_summary_pushes_date_filter(spark, sf_dir):
@@ -102,16 +149,20 @@ def test_quartiles_approx_no_global_sort(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_fuzzy_minhash_no_quadratic_join(spark, sf_dir):
+def test_fuzzy_minhash_no_quadratic_join(spark, sf_dir, monkeypatch):
     """The LSH-candidate fuzzy dedup must never fall back to the banded
     self-join's nested-loop comparison: candidates come from equi-joins
     on band keys, so the plan has hash joins only (the Levenshtein
     verify is a filter over the candidate join, not a join condition
-    over the corpus)."""
-    plan = _plan(spark, sf_dir, "dedup_fuzzy_minhash")
-    assert "CartesianProduct" not in plan
-    # the only BNLJs allowed are broadcast-tiny (none expected here)
-    assert "BroadcastNestedLoopJoin" not in plan
+    over the corpus). The band join runs in the fuzzy_title_pairs
+    memo build, so its build plans are checked too."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "dedup_fuzzy_minhash",
+                                   {"fuzzy_title_pairs"})
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        # the only BNLJs allowed are broadcast-tiny (none expected here)
+        assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_bpe_encode_jvm_fold_broadcast_merges(spark, sf_dir):
@@ -138,10 +189,9 @@ def test_minhash_signatures_single_shuffle(spark, sf_dir):
     )
     from data_pipeline_playground_spark.tables import table
 
-    # the dedup-family memo may have cached the signature frame in an
-    # earlier test file (the s-curve invariants run before this file);
-    # this pin asserts the BUILD plan, so drop cached blocks first —
-    # caching.memo re-materializes on next retrieval.
+    # this pin asserts the BUILD plan, so drop any cached blocks an
+    # earlier test left (the memos' own signature frames are
+    # localCheckpoints, which a fresh plan never reads)
     spark.catalog.clearCache()
     docs = table(spark, sf_dir, "documents")
     sig = signatures(spark, shingle_hashes(docs))
@@ -282,12 +332,15 @@ def test_dq_audit_fk_checks_are_anti_joins(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_dedup_incremental_anti_join(spark, sf_dir):
+def test_dedup_incremental_anti_join(spark, sf_dir, monkeypatch):
     """Survivors come from LEFT ANTI joins against the rejection sets —
-    the incremental screen must not materialize a positive cross join."""
-    plan = _plan(spark, sf_dir, "dedup_incremental")
+    the incremental screen must not materialize a positive cross join,
+    neither above nor inside the minhash_est memo build."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "dedup_incremental", {"minhash_est"})
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in build
 
 
 def test_source_cap_single_shuffle(spark, sf_dir):
@@ -353,13 +406,18 @@ def test_bpe_induction_vocab_shaped(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_dedup_keep_best_no_quadratic_join(spark, sf_dir):
+def test_dedup_keep_best_no_quadratic_join(spark, sf_dir, monkeypatch):
     """Canonical selection reuses the LSH candidate path: no cartesian
     product / BNLJ anywhere, and the argmax is a per-component window
-    (SortMergeJoin/shuffle on bounded component partitions is fine)."""
-    plan = _plan(spark, sf_dir, "dedup_keep_best")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    (SortMergeJoin/shuffle on bounded component partitions is fine).
+    "Anywhere" includes the minhash_est memo build, which holds the
+    MinHash band self-join (candidate_pairs/estimated_similarity)."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "dedup_keep_best", {"minhash_est"})
+    assert "SortMergeJoin" in build or "BroadcastHashJoin" in build
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_knn_label_vote_broadcast_scan(spark, sf_dir):
@@ -370,24 +428,31 @@ def test_knn_label_vote_broadcast_scan(spark, sf_dir):
     assert "SortMergeJoin" not in plan  # corpus side never shuffles for the join
 
 
-def test_ann_pq_topk_codes_side_no_vectors(spark, sf_dir):
+def test_ann_pq_topk_codes_side_no_vectors(spark, sf_dir, monkeypatch):
     """ADC consumes the CODES table joined to broadcast distance
     tables: broadcast hash joins only, and the per-(q,n) sum is a
-    combinable hash aggregate."""
-    plan = _plan(spark, sf_dir, "ann_pq_topk")
+    combinable hash aggregate. The pq_model memo build (codebook fit
+    and code assignment) has no nested-loop join either."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "ann_pq_topk", {"pq_model"})
     assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_pq_codes_bounded_windows(spark, sf_dir):
+def test_pq_codes_bounded_windows(spark, sf_dir, monkeypatch):
     """Code assignment is a NARROW MAP (r6): the packed per-subspace
     codebook broadcasts and the argmin is a transform+array_sort
-    projection — no fan-out join, no window, no assignment shuffle."""
-    plan = _plan(spark, sf_dir, "pq_codes")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "Window" not in plan
+    projection — no fan-out join, no window, no assignment shuffle.
+    The assignment runs inside the pq_model memo build, so the pinned
+    frames' build plans are checked; pq_codes itself reads the pin."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "pq_codes", {"pq_model"})
+    assert "BroadcastHashJoin" in build
+    assert "CartesianProduct" not in build
+    assert "Window" not in build
+    assert "ExistingRDD" in plan and "Window" not in plan
 
 
 def test_orders_snapshot_diff_key_join(spark, sf_dir):
@@ -407,22 +472,29 @@ def test_user_state_scd2_single_shuffle(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_split_leakage_broadcast_split_map(spark, sf_dir):
+def test_split_leakage_broadcast_split_map(spark, sf_dir, monkeypatch):
     """The (doc_id, split) maps broadcast into the memoized candidate
     pairs — no extra shuffle beyond the signature pipeline, and no
-    quadratic join anywhere."""
-    plan = _plan(spark, sf_dir, "split_leakage")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    quadratic join anywhere, the minhash_est memo build included."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "split_leakage", {"minhash_est"})
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_containment_prefix_filter(spark, sf_dir):
+def test_containment_prefix_filter(spark, sf_dir, monkeypatch):
     """Containment candidates come from the prefix×full equi-join on
-    shingle hash — no cartesian product / BNLJ anywhere."""
-    plan = _plan(spark, sf_dir, "dedup_containment_pairs")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    shingle hash — no cartesian product / BNLJ anywhere, the shingle
+    memo builds included."""
+    plan, build = _plan_and_builds(
+        spark, sf_dir, monkeypatch, "dedup_containment_pairs",
+        {"shingle_hash_ex", "shingle_ranked", "shingle_sets"},
+    )
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_trade_triangles_broadcast_joins(spark, sf_dir):
@@ -755,7 +827,7 @@ def test_checked_assignment_broadcast_codebook(spark, sf_dir):
     a cartesian), and the argmin windows partition by vec_id — no
     global-order window. Pinned on bisecting_assign_checked because
     its plan is built inline; kmeans_assign_checked shares _km_assign
-    but memoizes+caches, so its plan is an InMemoryTableScan."""
+    but memoizes a pinned frame, so its plan is a checkpoint scan."""
     plan = _plan(spark, sf_dir, "bisecting_assign_checked")
     # codebook probes: BNLJ with the tiny build side broadcast (the
     # corpus never shuffles for the join); the level-2 seed join has a
@@ -1320,13 +1392,16 @@ def test_cuped_two_combinable_aggs_no_join(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_pr_audit_fullouter_equi_join(spark, sf_dir):
+def test_pr_audit_fullouter_equi_join(spark, sf_dir, monkeypatch):
     """The tp/fp/fn counting is a full-outer EQUI join on the pair key
-    (sort-merge or hash), never a nested-loop."""
-    plan = _plan(spark, sf_dir, "dedup_pr_audit")
+    (sort-merge or hash), never a nested-loop — nor is any join in the
+    truth (exact Jaccard) or LSH memo builds it reads."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "dedup_pr_audit", _AUDIT_MEMOS)
     assert "FullOuter" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_lorenz_gini_broadcast_scalar(spark, sf_dir):
@@ -1471,14 +1546,19 @@ def test_effective_sources_two_aggs_no_join(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cluster_separation_broadcast_codebook_joins(spark, sf_dir):
+def test_cluster_separation_broadcast_codebook_joins(spark, sf_dir,
+                                                    monkeypatch):
     """Corpus never shuffles except the 16-row-partition argmin window;
     the codebook fan-outs are the intended <=16-row
     BroadcastNestedLoopJoins; the 16x16 inter-centroid join is
-    broadcast too."""
-    plan = _plan(spark, sf_dir, "cluster_separation_audit")
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    broadcast too. The k-means memo builds obey the same rules."""
+    plan, build = _plan_and_builds(
+        spark, sf_dir, monkeypatch, "cluster_separation_audit",
+        {"kmeans_checked_centroids", "kmeans_checked_model"},
+    )
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 def test_collocation_dice_broadcast_unigrams_topk(spark, sf_dir):
@@ -1619,28 +1699,40 @@ def test_staleness_broadcast_max(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_s_curve_reuses_prefix_filter_no_all_pairs(spark, sf_dir):
+def test_s_curve_reuses_prefix_filter_no_all_pairs(spark, sf_dir,
+                                                  monkeypatch):
     """Truth side runs the PPJoin prefix-filtered equi-join; caught
-    side is the banded candidate set — no nested-loop anywhere."""
-    plan = _plan(spark, sf_dir, "lsh_s_curve_audit")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    side is the banded candidate set — no nested-loop anywhere, the
+    memo builds of both sides included."""
+    plan, build = _plan_and_builds(spark, sf_dir, monkeypatch,
+                                   "lsh_s_curve_audit", _AUDIT_MEMOS)
+    for p in (plan, build):
+        assert "CartesianProduct" not in p
+        assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_sampled_audit_tiers_filter_before_shingling(spark, sf_dir):
+def test_sampled_audit_tiers_filter_before_shingling(spark, sf_dir,
+                                                     monkeypatch):
     """VERDICT r7 #2: the sampled tiers must push the deterministic
     hash sample to the document scan side of BOTH pipelines (truth and
     LSH) — the golden-ratio multiplier literal appearing in a Filter
     over the parquet scan, never a post-explode filter — and stay
-    equi-join-only like their exact contrast tiers."""
+    equi-join-only like their exact contrast tiers. The shingling runs
+    inside the sampled memo builds, so each query rebuilds them and
+    their build plans are checked."""
     for name in ("dedup_pr_audit_sampled", "lsh_s_curve_audit_sampled"):
-        plan = _plan(spark, sf_dir, name)
-        assert "1327217885" in plan, name  # sample predicate present
-        assert "CartesianProduct" not in plan, name
-        assert "BatchEvalPython" not in plan, name
+        plan, build = _plan_and_builds(
+            spark, sf_dir, monkeypatch, name,
+            {"grams_sampled", "minhash_est_sampled",
+             "shingle_hash_ex_sampled", "jaccard_pairs_wide_sampled"},
+        )
+        assert "1327217885" in build, name  # sample predicate present
+        for p in (plan, build):
+            assert "CartesianProduct" not in p, name
+            assert "BatchEvalPython" not in p, name
         # the sub-corpus memos materialize at plan-build time; both
-        # consumers must read the cached frames, not rebuild them
-        assert "InMemoryTableScan" in plan, name
+        # consumers must read the pinned frames, not rebuild them
+        assert "ExistingRDD" in plan, name
 
 
 def test_exact_substr_diagonal_islands_no_global_window(spark, sf_dir):
