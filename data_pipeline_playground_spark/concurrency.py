@@ -53,7 +53,7 @@ def run_concurrently(thunks: Iterable[Callable[[], Any]]) -> list[Any]:
 def materialize_concurrently(frames: Iterable[DataFrame]) -> None:
     """``cache().count()`` each frame from concurrent driver threads —
     the eager-materialization fan-out used by corpus_funnel's gate
-    drop-lists and news_pipeline's branch variant."""
+    drop-lists."""
     run_concurrently(
         [lambda df=df: df.cache().count() for df in frames]
     )

@@ -183,6 +183,8 @@ _MEMO_DEPS: dict[str, tuple[str, ...]] = {
     # child builds booked 0 s own-cost under the old weight order)
     "shingle_hash_ex_sampled": ("grams_sampled",),
     "kmeans_checked_model": ("kmeans_checked_centroids",),
+    # LDA fits on the tfidf_features frame's `tf` column
+    "lda_fit": ("tfidf_features",),
 }
 
 

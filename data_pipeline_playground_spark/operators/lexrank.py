@@ -331,7 +331,7 @@ def lexrank_sentence_summaries(docs: DataFrame, groups: DataFrame,
     if group_cap is not None:
         groups = _apply_group_cap(groups, group_cap, cap_observation)
     if sents is None:
-        sents = sentence_rows(docs).cache()
+        sents = sentence_rows(docs).localCheckpoint(eager=True)
     sent_groups = (
         sents.join(groups, "doc_id")
         .select(F.col("sid").alias("doc_id"), "group")

@@ -32,8 +32,7 @@ LEXRANK_GROUP_CAP = 512
 
 
 def run_news_pipeline(spark: SparkSession, sf_dir: str,
-                      n_keywords: int = 5, dedup: str = "minhash",
-                      eager_branches: bool = False) -> DataFrame:
+                      n_keywords: int = 5, dedup: str = "minhash") -> DataFrame:
     """Full reference pipeline shape on `documents`.
 
     1. D1  fuzzy dedup (keep-min-id survivors)
@@ -73,63 +72,63 @@ def run_news_pipeline(spark: SparkSession, sf_dir: str,
         )
     else:
         survivors = dedup_fuzzy_minhash(spark, sf_dir)
-    deduped = docs.join(survivors, "doc_id").select("doc_id", "text").cache()
+    # Every frame this pipeline reuses is pinned with
+    # localCheckpoint(eager=True), never .cache(): each call builds a
+    # new model, so its plans never match an earlier call's, and a
+    # .cache() pin would stay in the CacheManager for the session's
+    # life. The context cleaner frees a checkpoint once no plan holds it.
+    deduped = docs.join(survivors, "doc_id").select("doc_id", "text").localCheckpoint(eager=True)
 
-    # --- cluster (KMeans over CountVectorizer→IDF→Normalizer) ---
+    # --- cluster (KMeans over the shared TF-IDF featurizer) ---
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import IDF, CountVectorizer, Normalizer
 
     from data_pipeline_playground_spark.functions.text import tokenize
-
-    # Tokenization is ONE logical definition shared by the CV fit, the
-    # IDF fit and the feature materialization — but deliberately NOT
-    # cached: materializing per-doc token ARRAYS costs more than the
-    # regex re-runs it saves (measured +0.9 s at sf0.1 — the r8
-    # tokenize-once cache was the news_pipeline regression, VERDICT r9
-    # #2; the regex split stays inside whole-stage codegen over the
-    # already-cached deduped frame, so each re-read is a cheap scan).
-    toks = deduped.select(
-        "doc_id", "text", tokenize(F.col("text")).alias("tokens")
-    )
-    cv_model = CountVectorizer(inputCol="tokens", outputCol="tf").fit(toks)
-    tf = cv_model.transform(toks)
-    idf = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
     from data_pipeline_playground_spark.queries.ml import (
         KMEANS_K_CAP,
         KMEANS_MAX_ITER,
+        _tfidf_features,
     )
 
+    # Tokenization is ONE logical definition shared by the vocabulary,
+    # the IDF fit and the feature materialization — but deliberately
+    # NOT pinned: materializing per-doc token ARRAYS costs more than
+    # the regex re-runs it saves (measured +0.9 s at sf0.1 — the r8
+    # tokenize-once cache was the news_pipeline regression, VERDICT r9
+    # #2; the regex split stays inside whole-stage codegen over the
+    # already-pinned deduped frame, so each re-read is a cheap scan).
+    toks = deduped.select(
+        "doc_id", "text", tokenize(F.col("text")).alias("tokens")
+    )
+    feats, _ = _tfidf_features(toks)
     n = deduped.count()
-    # cached BEFORE the fit: every Lloyd iteration re-reads the feature
-    # frame — uncached, each one replays tokenize+CV+IDF+normalize
-    feats = Normalizer(inputCol="tfidf", outputCol="features", p=2.0).transform(
-        idf.transform(tf)
-    ).cache()
+    # pinned BEFORE the fit: every Lloyd iteration re-reads the feature
+    # frame — unpinned, each one replays tokenize+TF-IDF+normalize
+    feats = feats.select("doc_id", "text", "features").localCheckpoint(eager=True)
     # k = n//4 per cluster.py:51-53, capped (see queries/ml.py
     # KMEANS_K_CAP): uncapped, KMeans cost grows O(n²d) with the corpus.
     # maxIter is the shared fidelity knob recorded in the bench JSON
     # (the fit does NOT converge early at sf0.1 — measured numIter=10 —
     # so changing it changes assignments; kept at the documented value).
     k = max(2, min(n // 4, KMEANS_K_CAP))
-    # Fit on a COALESCED read of the cache: every Lloyd iteration is
+    # Fit on a COALESCED read of the pin: every Lloyd iteration is
     # one job over the feature frame, and 32 shuffle-partition slices
     # of a small corpus are scheduling-dominated (measured: fit
     # 2.4 s → 1.3 s at sf0.1, identical assignments). The coalesce is
-    # fit-only — downstream consumers keep the cache's full partition
-    # count for branch parallelism (a coalesced `clustered` cache
+    # fit-only — downstream consumers keep the pin's full partition
+    # count for branch parallelism (a coalesced `clustered` pin
     # measured +1 s across the branches). Count grows back toward the
     # session default as the corpus grows; coalesce past the existing
     # partition count is a no-op.
     km = KMeans(
         k=k, maxIter=KMEANS_MAX_ITER, seed=42, featuresCol="features"
     ).fit(feats.coalesce(max(4, 1 + n // 600)))
-    # cached: four downstream consumers (groups, keywords, sizes,
+    # pinned: four downstream consumers (groups, keywords, sizes,
     # summaries) would otherwise re-run the whole featurize+predict.
-    # tokens do NOT ride along: storing token arrays in the cache costs
+    # tokens do NOT ride along: storing token arrays in the pin costs
     # more than the keyword stage's one regex re-pass (VERDICT r9 #2).
     clustered = km.transform(feats).select(
         "doc_id", "text", F.col("prediction").alias("cluster_id")
-    ).cache()
+    ).localCheckpoint(eager=True)
 
     # --- summarize: LexRank top-1 per cluster (N10/T4) ---
     # Grouped applyInPandas fast path. Clusters are NOT bounded by the
@@ -202,39 +201,6 @@ def run_news_pipeline(spark: SparkSession, sf_dir: str,
         F.col("doc_id").alias("top_doc_id"),
         F.substring("text", 1, 160).alias("excerpt_text"),
     )
-    # The three non-trivial branches (doc-level LexRank best, keyword
-    # TF-IDF, sentence-level LexRank summaries) are independent stage
-    # DAGs over the already-cached `clustered`/`deduped` frames, and
-    # each reduces to ≤ k rows. Inside one composed action Spark runs
-    # them serially; ``eager_branches=True`` materializes them from
-    # concurrent driver threads instead (concurrency.py), overlapping
-    # the two applyInPandas passes with the keyword aggregation, and
-    # the final assembly joins k-row cached frames.
-    #
-    # Default False (ADVICE r10 #1 made this a real parameter): the
-    # threaded build wins only in a warm JVM (interleaved same-session
-    # A/B: 7.1-7.3 s threaded vs 9.0-11.5 s serial at sf0.1), but
-    # under the bench protocol — fresh session, sf0.001 warmup, first
-    # sf0.1 execution — it measured 9.7-10.4 s vs 6.7-7.2 s composed,
-    # probe-flanked clean both times: three branch plans compiling
-    # their codegen classes concurrently lose more than the stage
-    # overlap buys. Composed stays the default; the threaded path is
-    # the long-lived-session variant (and the 100 TB shape, where
-    # branch artifacts persist as their own jobs). Exercised by
-    # tests/test_multimodal_and_pipeline.py (same output both modes).
-    if not eager_branches:
-        return _assemble(sizes, keywords, best, summaries, excerpt)
-    from data_pipeline_playground_spark.concurrency import (
-        materialize_concurrently,
-    )
-
-    clustered.count()  # materialize the shared cache once, serially
-    materialize_concurrently((best, keywords, summaries))
-    return _assemble(sizes, keywords, best, summaries, excerpt)
-
-
-def _assemble(sizes: DataFrame, keywords: DataFrame, best: DataFrame,
-              summaries: DataFrame, excerpt: DataFrame) -> DataFrame:
     return (
         sizes.join(keywords, "cluster_id", "left")
         .join(best, "cluster_id", "left")

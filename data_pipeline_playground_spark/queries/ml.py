@@ -83,31 +83,41 @@ def _tokens_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _tfidf_features(tokens_df: DataFrame):
-    """CountVectorizer → IDF → L2 Normalizer pipeline (reference
-    cluster.py:25-30: TfidfVectorizer(smooth_idf=True) + L2 norm)."""
-    from pyspark.ml.feature import IDF, CountVectorizer, Normalizer
+    """Term counts → IDF → L2 Normalizer (reference cluster.py:25-30:
+    TfidfVectorizer(smooth_idf=True) + L2 norm). Adds ``tf``, ``tfidf``
+    and ``features`` to ``tokens_df``; returns (frame, vocabulary).
 
-    cv = CountVectorizer(inputCol="tokens", outputCol="tf")
-    cv_model = cv.fit(tokens_df)
+    The vocabulary is one SQL aggregate with a total order: term
+    counts, ``count desc, term asc``, the first 1 << 18 terms. These
+    are the terms ``CountVectorizer.fit`` keeps, but a fit orders tied
+    counts by task order, so its term indices vary from run to run."""
+    from pyspark.ml.feature import IDF, CountVectorizerModel, Normalizer
+
+    vocab = [
+        r.term
+        for r in tokens_df.select(F.explode("tokens").alias("term"))
+        .groupBy("term").agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), F.asc("term")).limit(1 << 18).collect()
+    ]
+    cv_model = CountVectorizerModel.from_vocabulary(vocab, inputCol="tokens", outputCol="tf")
     tf = cv_model.transform(tokens_df)
     idf = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
     feats = idf.transform(tf)
     norm = Normalizer(inputCol="tfidf", outputCol="features", p=2.0)
-    return norm.transform(feats), cv_model.vocabulary
+    return norm.transform(feats), vocab
 
 
 def _tfidf_features_memo(spark: SparkSession, sf_dir: str):
-    """Corpus TF-IDF features, fitted once per (session, sf_dir) —
-    KMeans, BisectingKMeans and the dedup-free ML paths all featurize
-    the identical documents table, so the two fits (CountVectorizer,
-    IDF) and the pinned feature frame are shared. Returns
-    (features_df, vocabulary, n_docs)."""
+    """Corpus TF-IDF features, built once per (session, sf_dir) —
+    KMeans, BisectingKMeans (``features``) and LDA (``tf``) all read
+    the identical documents table, so the ordered vocabulary, the IDF
+    fit and the pinned (doc_id, tf, features) frame are shared and the
+    same on every run. Returns (features_df, vocabulary, n_docs)."""
     from data_pipeline_playground_spark.caching import memo
 
     def build():
-        toks = _tokens_df(spark, sf_dir)
-        feats, vocab = _tfidf_features(toks)
-        feats = feats.localCheckpoint(eager=True)
+        feats, vocab = _tfidf_features(_tokens_df(spark, sf_dir))
+        feats = feats.select("doc_id", "tf", "features").localCheckpoint(eager=True)
         return (feats, vocab, feats.count())
 
     return memo(spark, "tfidf_features", sf_dir, build)
@@ -139,26 +149,26 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cost, so memoize per (session, sf_dir) — deterministic (seeded, same
 # input), and never reused across sessions (caching.py).
 def _lda_fit(spark: SparkSession, sf_dir: str):
+    """LDA on the ``tf`` bag-of-words of the pinned ``tfidf_features``
+    frame, indexed by its ordered vocabulary; pins nothing of its own.
+    Returns (vocabulary, model, bow)."""
     from data_pipeline_playground_spark.caching import memo
 
     def build():
         from pyspark.ml.clustering import LDA
-        from pyspark.ml.feature import CountVectorizer
 
-        toks = _tokens_df(spark, sf_dir)
-        cv_model = CountVectorizer(inputCol="tokens", outputCol="features").fit(toks)
-        # pinned BEFORE the fit: online VB samples the corpus every
-        # iteration — unpinned, each pass replays tokenize+CV transform
-        bow = cv_model.transform(toks).localCheckpoint(eager=True)
-        n = bow.count()
+        bow, vocab, n = _tfidf_features_memo(spark, sf_dir)
         k = max(2, min(n // 5, 10))
         # maxIter=5 (vs 10 in rounds 2-4; reference gensim passes=50 on
         # ~100 docs, lda.py:49): online VB's document-topic argmax — the
         # only thing the two consumers read — stabilizes within a few
         # corpus passes at this k; rows-only queries, documented cut in
         # the KMEANS_K_CAP spirit to keep the no-oracle bench block lean.
-        model = LDA(k=k, maxIter=LDA_MAX_ITER, seed=SEED, optimizer="online").fit(bow)
-        return (cv_model, model, bow)
+        model = LDA(
+            k=k, maxIter=LDA_MAX_ITER, seed=SEED, optimizer="online",
+            featuresCol="tf",
+        ).fit(bow)
+        return (vocab, model, bow)
 
     return memo(spark, "lda_fit", sf_dir, build)
 
@@ -169,8 +179,7 @@ def lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped for corpus-level tractability; passes→maxIter). Output:
     topic → top-10 keywords (reference extracts 10 keywords/topic,
     lda.py:54)."""
-    cv_model, model, _ = _lda_fit(spark, sf_dir)
-    vocab = cv_model.vocabulary
+    vocab, model, _ = _lda_fit(spark, sf_dir)
     topics = model.describeTopics(10)
     # space-joined string (not array<string>) so the driver's
     # pandas-based hasher can factorize the column; order is the

@@ -35,6 +35,42 @@ def test_lda_doc_topics_partition(spark, sf_dir):
     assert sum(r.n_docs for r in res) == _n_docs(spark, sf_dir)
 
 
+def test_tfidf_vocabulary_independent_of_partitioning(spark, sf_dir):
+    """The TF-IDF vocabulary is ordered by (count desc, term asc) and
+    so are the term indices of every vector: the same tokens under one
+    and under seven input partitions give the same vocabulary and the
+    same feature frame (hashed through vector_to_array, so the hash
+    sees the indices)."""
+    from collections import Counter
+
+    from pyspark.ml.functions import vector_to_array
+
+    from data_pipeline_playground_spark.queries.ml import (
+        _tfidf_features,
+        _tokens_df,
+    )
+
+    toks = _tokens_df(spark, sf_dir)
+
+    def featurize(n_parts):
+        feats, vocab = _tfidf_features(toks.repartition(n_parts))
+        arrays = feats.select(
+            "doc_id",
+            *[vector_to_array(c).alias(c) for c in ("tf", "tfidf", "features")],
+        )
+        digest = arrays.agg(
+            F.count(F.lit(1)),
+            F.sum(F.xxhash64(*arrays.columns).cast("decimal(38,0)")),
+        ).first()
+        return vocab, tuple(digest)
+
+    counts = Counter(t for r in toks.collect() for t in r.tokens)
+    want = sorted(counts, key=lambda t: (-counts[t], t))
+    one = featurize(1)
+    assert one[0] == want
+    assert featurize(7) == one
+
+
 def test_lexrank_topk_per_group(spark, sf_dir):
     df = _QUERIES["lexrank_representatives"](spark, sf_dir)
     res = df.collect()

@@ -84,27 +84,19 @@ def test_news_pipeline_end_to_end(spark, sf_dir):
         assert r.summary_text  # every cluster got a representative text
 
 
-def test_news_pipeline_eager_branches_same_output(spark, sf_dir):
-    """ADVICE r10 #1: the threaded eager-branch variant is a real
-    parameter with coverage — it must produce exactly the composed
-    plan's rows (the threads only change WHEN branch frames
-    materialize, never what they contain)."""
-    from data_pipeline_playground_spark.plans.news_pipeline import (
-        run_news_pipeline,
-    )
+def test_news_pipeline_leaves_no_cache_entry(spark, sf_dir):
+    """The pipeline pins its reused frames with localCheckpoint, not
+    .cache(): each call builds a new KMeans model, so a cached plan
+    never matches an earlier call's entry and every call would leave
+    new entries in the JVM CacheManager for the session's life."""
+    from data_pipeline_playground_spark.plans.news_pipeline import run_news_pipeline
 
-    def key(rows):
-        return sorted(
-            (r.cluster_id, r.n_articles, r.keywords, r.top_doc_id,
-             r.summary_text)
-            for r in rows
-        )
-
-    composed = key(run_news_pipeline(spark, sf_dir).collect())
-    threaded = key(
-        run_news_pipeline(spark, sf_dir, eager_branches=True).collect()
-    )
-    assert composed == threaded
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    run_news_pipeline(spark, sf_dir).collect()
+    after_first = cache_manager.numCachedEntries()
+    run_news_pipeline(spark, sf_dir).collect()
+    assert cache_manager.numCachedEntries() == after_first == before
 
 
 def test_news_pipeline_greedy_fidelity_snapshot(spark, sf_dir):
