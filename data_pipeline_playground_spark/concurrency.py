@@ -1,15 +1,16 @@
 """Driver-side concurrent job submission (ADVICE r10 #3).
 
 Spark schedules jobs submitted from separate driver threads side by
-side, so independent stage DAGs (eager cache materializations, the
-sampled-audit pred/truth builds) can overlap instead of serializing.
-Three call sites grew this pattern independently with plain
-``threading.Thread``; under PySpark's default pinned-thread mode plain
-threads do NOT inherit the parent's job group / scheduler-pool local
-properties, so any future bench-level cancellation or fair-scheduler
-pool assignment would silently miss these jobs. This module is the one
-shared fan-out, built on ``pyspark.InheritableThread`` (a drop-in
-Thread replacement that propagates the inheritable thread-locals).
+side, so independent stage DAGs (corpus_funnel's eager drop-list
+checkpoints, the sampled-audit pred/truth builds) can overlap instead
+of serializing. Those call sites grew the pattern independently with
+plain ``threading.Thread``; under PySpark's default pinned-thread mode
+plain threads do NOT inherit the parent's job group / scheduler-pool
+local properties, so any future bench-level cancellation or
+fair-scheduler pool assignment would silently miss these jobs. This
+module is the one shared fan-out, built on
+``pyspark.InheritableThread`` (a drop-in Thread replacement that
+propagates the inheritable thread-locals).
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ from collections.abc import Callable, Iterable
 from typing import Any
 
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame
 
 
 def run_concurrently(thunks: Iterable[Callable[[], Any]]) -> list[Any]:
@@ -49,11 +49,3 @@ def run_concurrently(thunks: Iterable[Callable[[], Any]]) -> list[Any]:
             raise exc
     return out
 
-
-def materialize_concurrently(frames: Iterable[DataFrame]) -> None:
-    """``cache().count()`` each frame from concurrent driver threads —
-    the eager-materialization fan-out used by corpus_funnel's gate
-    drop-lists."""
-    run_concurrently(
-        [lambda df=df: df.cache().count() for df in frames]
-    )

@@ -40,15 +40,16 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
     Every round shuffles by vertex id (the join and the min-agg share
     the key, so the exchange is reused); the edge list itself is
-    symmetrized once and cached. Convergence is detected with a count
-    of changed labels — one cheap action per round on a checkpointed
-    frame.
+    symmetrized once and checkpointed (its blocks are released with
+    the frame, no unpersist needed). Convergence is detected with a
+    count of changed labels — one cheap action per round on a
+    checkpointed frame.
     """
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
         .distinct()
-        .cache()
+        .localCheckpoint(eager=True)
     )
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
@@ -80,7 +81,6 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         if changed == 0:
             break
 
-    sym.unpersist()
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("component_id"))
 
 

@@ -9,6 +9,11 @@ is the ≤ P-row offsets frame. Exact wherever the range sampler puts
 the bounds, because the key (including the id tie-break) is a total
 order.
 
+Both operators pin their range-bucketed frame with
+``localCheckpoint(eager=True)``, the package's one pin mechanism: the
+ContextCleaner releases its blocks once the result frame is dropped,
+so repeated calls in a long session hold no CacheManager entry.
+
 ``exact_ntile`` converts the global rank to the SQL ntile(k) bucket in
 pure integer arithmetic (first n mod k buckets take ceil(n/k) rows) —
 no double division anywhere near a bucket boundary.
@@ -16,37 +21,10 @@ no double division anywhere near a bucket boundary.
 
 from __future__ import annotations
 
-from collections import deque
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 RANGE_BUCKETS = 32
-
-# Cached ranked frames, retired FIFO (ADVICE r7): a long session
-# (driver correctness sweep, oracle-mirror pytest) invokes global_rank
-# dozens of times and a per-invocation permanent cache accumulates
-# storage blocks for its lifetime. The operator only needs ONE
-# materialization while the consuming query runs; the deepest consumer
-# holds 3 ranked frames at once (value_ks_drift), so keeping the last
-# 8 live is generous. A frame retired early merely recomputes through
-# its already-frozen range-shuffle on any later re-execution — the
-# bucket assignment is pinned in the shuffle dependency, not the cache.
-_LIVE_CACHES: deque[tuple[int, DataFrame]] = deque()
-_MAX_LIVE = 8
-
-
-def _register_cache(df: DataFrame) -> None:
-    # CacheManager entries are keyed by canonical plan: two frames with
-    # the same analyzed plan SHARE one entry, and unpersisting either
-    # evicts both. Track the semantic hash so retiring an old frame
-    # never evicts a live twin's materialization.
-    h = df._jdf.queryExecution().analyzed().semanticHash()
-    _LIVE_CACHES.append((h, df))
-    while len(_LIVE_CACHES) > _MAX_LIVE:
-        h0, d0 = _LIVE_CACHES.popleft()
-        if all(h1 != h0 for h1, _ in _LIVE_CACHES):
-            d0.unpersist(blocking=False)
 
 
 def global_rank(
@@ -55,41 +33,33 @@ def global_rank(
     rank_name: str = "global_rank",
     total_name: str = "n_total",
     buckets: int = RANGE_BUCKETS,
-    cache_input: bool = False,
 ) -> DataFrame:
     """All input columns + the exact 1-based global rank under the
     total order ``keys`` (pass an id last to break ties) + the total
     row count.
 
-    The ranked frame is cached and materialized INSIDE the operator:
-    the offsets branch and the main branch must observe the SAME
-    range-bucket assignment — re-executing the range exchange in two
-    subtrees would double the work and bet on the sampler placing
-    identical bounds twice (see customer_spend_quartiles_ranked).
+    The ranked frame is checkpointed INSIDE the operator
+    (``localCheckpoint(eager=True)``): the offsets branch and the main
+    branch must observe the SAME range-bucket assignment — re-executing
+    the range exchange in two subtrees would double the work and bet
+    on the sampler placing identical bounds twice (see
+    customer_spend_quartiles_ranked). The checkpoint's blocks are
+    released when the returned frame is garbage-collected; nothing is
+    left in the CacheManager.
 
-    Round 15 (guide §2.4): with ``cache_input=True`` the INPUT is
-    cached too, because repartitionByRange runs a separate
-    range-sampling job that re-executes the input subtree end-to-end
-    — a consumer with an expensive upstream (tokenize chains) pays it
-    TWICE. Rank exactness never depends on where the sampler puts the
-    bounds, so this is purely mechanical; both frames retire through
-    the same FIFO deque. Opt-in because for cheap inputs (a parquet
-    scan + map-combinable aggregate) the extra materialization job
-    measured SLOWER than re-executing the subtree.
+    repartitionByRange runs a separate range-sampling job over the
+    input, so a caller with an expensive upstream (tokenize chains)
+    checkpoints its input first (curriculum_stages,
+    padding_waste_audit); for cheap inputs re-executing the subtree
+    is faster.
     """
-    if cache_input and not (
-        df.storageLevel.useMemory or df.storageLevel.useDisk
-    ):
-        df = df.cache()
-        df.count()
-        _register_cache(df)
     ranged = df.repartitionByRange(buckets, *keys).withColumn(
         "_pid", F.spark_partition_id()
     )
     wb = Window.partitionBy("_pid").orderBy(*keys)
-    local = ranged.withColumn("_local_rn", F.row_number().over(wb)).cache()
-    local.count()
-    _register_cache(local)
+    local = ranged.withColumn(
+        "_local_rn", F.row_number().over(wb)
+    ).localCheckpoint(eager=True)
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n_pid"))
     wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
@@ -125,9 +95,9 @@ def global_cumsum(
     the ≤ P-row offsets frame. Exact for integer/decimal sum columns
     (the additions reassociate exactly).
 
-    Like global_rank, the bucketed frame is cached and materialized
-    INSIDE the operator so the offsets branch and the main branch
-    observe the SAME range-bucket assignment.
+    Like global_rank, the bucketed frame is checkpointed INSIDE the
+    operator so the offsets branch and the main branch observe the
+    SAME range-bucket assignment.
     """
     ranged = df.repartitionByRange(buckets, *keys).withColumn(
         "_pid", F.spark_partition_id()
@@ -140,9 +110,7 @@ def global_cumsum(
     local = ranged
     for c in sum_cols:
         local = local.withColumn(f"_cum_{c}", F.sum(c).over(wb))
-    local = local.cache()
-    local.count()
-    _register_cache(local)
+    local = local.localCheckpoint(eager=True)
     totals = local.groupBy("_pid").agg(
         *[F.sum(c).alias(f"_tot_{c}") for c in sum_cols]
     )

@@ -100,7 +100,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 2)
-        .cache()
+        .localCheckpoint(eager=True)
     )
     bge = t.select(
         "doc_id",
@@ -1155,7 +1155,7 @@ def collocation_dice(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 2)
-        .cache()
+        .localCheckpoint(eager=True)
     )
     bge = t.select(
         F.explode(

@@ -135,13 +135,12 @@ def pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w_dec").cast("double")
             / F.sum("w_dec").over(wsrc).cast("double")
         ).alias("p"),
-    ).cache()
-    # materialize eagerly: every iteration references edges, and without
-    # the cache the normalization window re-executes once per round
-    # (the 6-table edge derivation itself is the shared trade_edges
-    # memo); the edge table is ≤ nations² rows, so this is the cheap
-    # side of that trade at any scale
-    edges.count()
+    ).localCheckpoint(eager=True)
+    # checkpointed eagerly: every iteration references edges, and
+    # without the pin the normalization window re-executes once per
+    # round (the 6-table edge derivation itself is the shared
+    # trade_edges memo); the edge table is ≤ nations² rows, so this is
+    # the cheap side of that trade at any scale
     nodes = n.select(F.col("n_name").alias("node"))
     ranks = nodes.select("node", F.lit(1.0 / PR_N).alias("r"))
     base = F.lit((1 - PR_DAMPING) / PR_N)

@@ -309,7 +309,7 @@ def term_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.filter(tokenize(F.col("text")), lambda t: F.length(t) > 2)
             )
         ).alias("tok"),
-    ).cache()
+    ).localCheckpoint(eager=True)
     n = ex.agg(F.countDistinct("doc_id").alias("n_docs"))
     dfr = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     a = ex.select(F.col("doc_id").alias("da"), F.col("tok").alias("ta"))
@@ -613,14 +613,18 @@ def bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     before every rank (same ln-parity discipline as bm25_topk).
     """
     docs = table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).cache()
-    # Slim (doc_id, dl) cache (round 15, guide §2.3): both scoring
-    # passes join dl and aggregate st, and uncached each reference
-    # re-scanned the FAT token cache (arrays deserialize per scan) —
+    t = docs.select(
+        "doc_id", tokenize(F.col("text")).alias("toks")
+    ).localCheckpoint(eager=True)
+    # Slim (doc_id, dl) pin (round 15, guide §2.3): both scoring
+    # passes join dl and aggregate st, and unpinned each reference
+    # re-scanned the FAT token frame (arrays deserialize per scan) —
     # the split-timed passes spent more in repeated t scans than in
-    # scoring. dl is two ints per doc; caching it leaves t scanned
+    # scoring. dl is two ints per doc; pinning it leaves t scanned
     # only by the token explodes.
-    dl = t.select("doc_id", F.size("toks").alias("dl")).cache()
+    dl = t.select(
+        "doc_id", F.size("toks").alias("dl")
+    ).localCheckpoint(eager=True)
     st = dl.agg(F.avg("dl").alias("avgdl"), F.count(F.lit(1)).alias("n_docs"))
     tok = t.select("doc_id", F.explode("toks").alias("term"))
     q1 = t.sparkSession.createDataFrame(

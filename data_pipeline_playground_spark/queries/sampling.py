@@ -558,7 +558,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size except the drop-set joins, each bounded by its
     dropped population.
 
-    The three drop-sets are EAGERLY materialized (cache + count) as
+    The three drop-sets are EAGERLY checkpointed (localCheckpoint) as
     their own jobs before the final pass, for two measured reasons:
     (1) each gate then executes the same subplan its standalone
     oracle-checked query compiles, so generated-code classes are
@@ -568,7 +568,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     warmup compiles DIFFERENT shapes than sf0.1 — the JIT-cliff
     cousin documented in SCALE.md); (2) at 100 TB the drop-lists are
     exactly what a real pipeline persists for audit/idempotent
-    re-runs, and each tiny cached doc_id set broadcasts into the
+    re-runs, and each tiny checkpointed doc_id set broadcasts into the
     final scan instead of sort-merge-joining it.
     """
     from data_pipeline_playground_spark.functions.text import tokenize
@@ -626,7 +626,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .withColumn("con1", F.lit(1))
     )
-    # eager drop-list materialization — see docstring (codegen-unit
+    # eager drop-list checkpoints — see docstring (codegen-unit
     # isolation + broadcastable tiny sets; persisted lists at 100 TB).
     # The three builds are independent stage DAGs, so they run from
     # CONCURRENT driver threads (concurrency.py — the
@@ -635,15 +635,15 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each gate's narrow final stages drain. NOTE (ADVICE r10 #2): the
     # memos behind these gates (minhash est, the spans pipeline's
     # inputs) were already built ABOVE, serially on this thread, at
-    # plan-construction time — the threads only materialize the three
-    # cached drop-list frames. caching.memo additionally holds a
-    # per-key lock, so even a future edit that moved a memo build into
-    # a thread could not race two builders on one key.
-    from data_pipeline_playground_spark.concurrency import (
-        materialize_concurrently,
-    )
+    # plan-construction time — the threads only checkpoint the three
+    # drop-list frames. caching.memo additionally holds a per-key lock,
+    # so even a future edit that moved a memo build into a thread could
+    # not race two builders on one key.
+    from data_pipeline_playground_spark.concurrency import run_concurrently
 
-    materialize_concurrently((dup, sdup, con))
+    dup, sdup, con = run_concurrently(
+        [lambda df=df: df.localCheckpoint(eager=True) for df in (dup, sdup, con)]
+    )
     f = (
         flags.join(F.broadcast(dup), "doc_id", "left")
         .join(F.broadcast(sdup), "doc_id", "left")
@@ -894,9 +894,11 @@ def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).alias("n_tokens"),
         quality_score_col(toks, F.size(toks)).alias("qs"),
     )
-    # cache_input: the tokenize+quality upstream is the dominant cost
+    # checkpointed: the tokenize+quality upstream is the dominant cost
     # and the range sampler would otherwise execute it twice (r15)
-    rk = global_rank(d, ["qs", "doc_id"], rank_name="rank", cache_input=True)
+    rk = global_rank(
+        d.localCheckpoint(eager=True), ["qs", "doc_id"], rank_name="rank"
+    )
     staged = rk.withColumn(
         "quality_decile", exact_ntile(F.col("rank"), F.col("n_total"), 10)
     )

@@ -390,9 +390,9 @@ def daily_user_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
       sum over the bounded daily frame yields the cumulative curve —
       one linear pass, no expanding-window rescan.
     - staleness is the symmetric last-occurrence transform.
-    The (user, day) frame is cached (four consumers); every join after
-    the aggregates is day-cardinality. One user-shaped shuffle + one
-    fan-out distinct — the shape that survives 100 TB.
+    The (user, day) frame is checkpointed (four consumers); every join
+    after the aggregates is day-cardinality. One user-shaped shuffle +
+    one fan-out distinct — the shape that survives 100 TB.
     """
     ev = table(spark, sf_dir, "events")
     ud = (
@@ -400,7 +400,7 @@ def daily_user_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
         )
         .distinct()
-        .cache()
+        .localCheckpoint(eager=True)
     )
     mx = ud.agg(F.max("day").alias("dmax"))
     fan = ud.select(

@@ -71,9 +71,10 @@ def read_jsonl_with_quarantine(
     Production ingestion hygiene for a 100 TB feed: malformed records
     must neither kill the job (FAILFAST) nor vanish (DROPMALFORMED) —
     PERMISSIVE mode routes them to a side output for replay/audit.
-    The frame is cached before the split: Spark only populates the
-    corrupt-record column on rows materialized with the full schema,
-    so filtering it without materializing first is unsupported.
+    The frame is checkpointed (eagerly) before the split: Spark only
+    populates the corrupt-record column on rows materialized with the
+    full schema, so filtering it without materializing first is
+    unsupported.
     """
     struct = (
         T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
@@ -84,7 +85,7 @@ def read_jsonl_with_quarantine(
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()
+        .localCheckpoint(eager=True)
     )
     good = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     quarantined = raw.filter(F.col("_corrupt_record").isNotNull()).select(

@@ -1,8 +1,10 @@
-"""Unit tests for the session-aware memo cache (caching.py).
+"""Unit tests for the session-aware memo cache (caching.py) and the
+package's one pin mechanism.
 
-Every memo builder pins its frames with ``localCheckpoint(eager=True)``,
-so a memo is built once per (session, name, sf_dir) and a
-``clearCache()`` neither drops it nor triggers a rebuild.
+Every memo builder, operator and query pins its frames with
+``localCheckpoint(eager=True)``, so a memo is built once per (session,
+name, sf_dir), a ``clearCache()`` neither drops it nor triggers a
+rebuild, and a query leaves no CacheManager entry behind.
 """
 
 from __future__ import annotations
@@ -39,50 +41,91 @@ def test_memo_nondataframe_values_pass_through(spark, sf_dir):
     assert caching.memo(spark, "t_memo_scalar", sf_dir, lambda: None) == {"k": 1}
 
 
-def test_global_rank_retires_old_caches_fifo(spark):
-    """ADVICE r7 (low): repeated global_rank calls must not accumulate
-    cached frames for the session lifetime — only the most recent
-    _MAX_LIVE stay persisted, and a retired frame still yields correct
-    ranks by recomputing through its frozen range-shuffle."""
+def _cache_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_global_rank_and_cumsum_repeated_calls_leave_no_cache_entry(spark):
+    """global_rank and global_cumsum pin their range-bucketed frame with
+    localCheckpoint, so repeated calls in one long session add no
+    CacheManager entry, and every call still gives the exact 1..n
+    ranks and the exact running sums."""
     from data_pipeline_playground_spark.operators import ranking
 
-    ranking._LIVE_CACHES.clear()
-
-    def build(m):  # distinct modulo -> distinct canonical plan per call
+    spark.catalog.clearCache()
+    for m in range(7, 17):  # distinct modulo -> distinct plan per call
         base = spark.range(100).select(
             F.col("id"), (F.col("id") % m).alias("k")
         )
-        return ranking.global_rank(base, ["k", "id"], rank_name="r")
+        ranked = ranking.global_rank(base, ["k", "id"], rank_name="r")
+        rows = ranked.orderBy("r").select("r", "k", "id").collect()
+        assert [x.r for x in rows] == list(range(1, 101))
+        assert [(x.k, x.id) for x in rows] == sorted(
+            (i % m, i) for i in range(100)
+        )
+        summed = ranking.global_cumsum(base, ["k", "id"], ["k"], buckets=8)
+        got = {x.id: x.cum_k for x in summed.select("id", "cum_k").collect()}
+        running, want = 0, {}
+        for k, i in sorted((i % m, i) for i in range(100)):
+            running += k
+            want[i] = running
+        assert got == want
+        assert _cache_entries(spark) == 0
 
-    first = build(7)
-    frames = [build(11 + i) for i in range(ranking._MAX_LIVE + 2)]
-    assert len(ranking._LIVE_CACHES) == ranking._MAX_LIVE
-    live = sum(
-        1 for _, d in list(ranking._LIVE_CACHES)
-        if d.storageLevel.useMemory or d.storageLevel.useDisk
-    )
-    assert live == ranking._MAX_LIVE
-    # plan-keyed sharing: registering the SAME plan twice must not let
-    # retirement evict the live twin's shared cache entry — after
-    # twin_a is pushed out, EVERY deque entry (including twin_b's
-    # internal ranked frame, which shares twin_a's cache entry) must
-    # still be materialized
-    twin_a, twin_b = build(7), build(7)
-    for i in range(ranking._MAX_LIVE - 1):
-        build(101 + i)  # push twin_a out of the deque
-    assert all(
-        d.storageLevel.useMemory or d.storageLevel.useDisk
-        for _, d in list(ranking._LIVE_CACHES)
-    )
-    assert twin_a is not twin_b  # two invocations, one shared cache
-    # `first`'s backing cache was retired — re-executing it recomputes
-    # and the ranks stay the exact 1..n permutation
-    rows = first.orderBy("r").select("r", "k", "id").collect()
-    assert [x.r for x in rows] == list(range(1, 101))
-    assert [(x.k, x.id) for x in rows] == sorted(
-        (x.k, x.id) for x in rows
-    )
-    assert frames  # keep refs alive through the assertion above
+
+_PIN_FREE_QUERIES = (
+    "bm25_prf_topk",
+    "curriculum_stages",
+    "bigram_logprob",
+    "daily_user_curves",
+    "pagerank_nations",
+    "term_pmi_topk",
+    "value_ks_drift",
+    "customer_quartile_migration",
+    "corpus_funnel",
+    "collocation_dice",
+)
+
+
+def test_queries_leave_no_cache_entry(spark, sf_dir):
+    """A long-lived session that never calls clearCache (a service)
+    must not accumulate CacheManager entries: the queries that pin
+    intermediate frames do so with localCheckpoint, whose blocks go
+    with the frame."""
+    from data_pipeline_playground_spark.registry import all_queries
+
+    q = all_queries()
+    spark.catalog.clearCache()  # earlier tests may hold matching plans
+    for name in _PIN_FREE_QUERIES:
+        q[name](spark, sf_dir).collect()
+        assert _cache_entries(spark) == 0, f"{name} left a cache entry"
+
+
+def test_package_pins_only_with_local_checkpoint():
+    """AST guard: no ``.cache()`` or ``.persist()`` call in the package
+    except the transient filter barrier in similarity._embed_dup_pairs
+    (unpersisted in the same call). Every pin is
+    ``localCheckpoint(eager=True)``."""
+    import ast
+    import pathlib
+
+    import data_pipeline_playground_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("cache", "persist")
+                ):
+                    owner = getattr(top, "name", "<module>")
+                    rel = path.relative_to(root).as_posix()
+                    found.append((rel, owner, node.func.attr))
+    assert found == [("queries/similarity.py", "_embed_dup_pairs", "cache")]
 
 
 def test_memo_ledger_records_build_and_remat(spark, sf_dir):

@@ -72,6 +72,19 @@ def _plan_and_builds(spark, sf_dir, monkeypatch, name, memo_names):
     return consumer[0], "\n".join(builds)
 
 
+def _plans_with_pins(spark, sf_dir, monkeypatch, name) -> list[str]:
+    """[consumer plan, build plan of every frame the query pins]. The
+    ranking operators pin their range-bucketed frame with
+    localCheckpoint, so the consumer plan shows only a checkpoint scan
+    and the range exchange is visible only in the build plans."""
+    consumer: list[str] = []
+    builds = _memo_build_plans(
+        spark, monkeypatch, (),
+        lambda: consumer.append(_plan(spark, sf_dir, name)),
+    )
+    return consumer + builds
+
+
 def test_pricing_summary_pushes_date_filter(spark, sf_dir):
     plan = _plan(spark, sf_dir, "pricing_summary")
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
@@ -793,14 +806,16 @@ def test_events_throttle_single_shuffle_arrow(spark, sf_dir):
     assert m and len(m.group(1).split(",")) == 3
 
 
-def test_quartiles_ranked_no_global_sort(spark, sf_dir):
+def test_quartiles_ranked_no_global_sort(spark, sf_dir, monkeypatch):
     """Exact distributed ntile: range partitioning + per-bucket window;
     the only SinglePartition exchange may be the <=P-row offsets frame
     (below the broadcast), never the customer frame's ranking path."""
-    plan = _plan(spark, sf_dir, "customer_spend_quartiles_ranked")
-    assert "rangepartitioning" in plan
-    main = plan.split("BroadcastExchange")[0]
-    assert "SinglePartition" not in main
+    plans = _plans_with_pins(
+        spark, sf_dir, monkeypatch, "customer_spend_quartiles_ranked")
+    assert "rangepartitioning" in "\n".join(plans)
+    for plan in plans:
+        main = plan.split("BroadcastExchange")[0]
+        assert "SinglePartition" not in main
 
 
 def test_cogroup_survives_sorted_projection(spark, sf_dir):
@@ -1310,14 +1325,15 @@ def test_top_pc_single_pass_agg_no_python(spark, sf_dir):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_rfm_no_single_partition_customer_sort(spark, sf_dir):
+def test_rfm_no_single_partition_customer_sort(spark, sf_dir, monkeypatch):
     """RFM ranks three dimensions via the two-level range scheme —
     the customer frame must never pass through a SinglePartition
     exchange (only the <=P-row offsets frames may)."""
-    plan = _plan(spark, sf_dir, "customer_rfm_segments")
-    assert "rangepartitioning" in plan
-    main = plan.split("BroadcastExchange")[0]
-    assert "SinglePartition" not in main
+    plans = _plans_with_pins(spark, sf_dir, monkeypatch, "customer_rfm_segments")
+    assert "rangepartitioning" in "\n".join(plans)
+    for plan in plans:
+        main = plan.split("BroadcastExchange")[0]
+        assert "SinglePartition" not in main
 
 
 def test_median_ci_broadcast_sample_join(spark, sf_dir):
@@ -1328,11 +1344,12 @@ def test_median_ci_broadcast_sample_join(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_gini_ranks_without_global_sort(spark, sf_dir):
+def test_gini_ranks_without_global_sort(spark, sf_dir, monkeypatch):
     """The merged Lorenz+Gini query ranks spend via the two-level
     scheme — the customer frame must not cross a SinglePartition
     exchange before the 1-row moment aggregate / decile rollup."""
-    plan = _plan(spark, sf_dir, "revenue_lorenz_gini")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "revenue_lorenz_gini"))
     assert "rangepartitioning" in plan
 
 
@@ -1354,11 +1371,12 @@ def test_markov_single_conditional_agg(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_ks_three_rankings_no_single_partition_fact(spark, sf_dir):
+def test_ks_three_rankings_no_single_partition_fact(spark, sf_dir, monkeypatch):
     """KS cumulative counts come from two-level rankings — the pooled
     event frame must never cross a SinglePartition exchange (only the
     offsets/scalar frames may, below broadcasts)."""
-    plan = _plan(spark, sf_dir, "value_ks_drift")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "value_ks_drift"))
     assert "rangepartitioning" in plan
     # the oracle needs a global cumulative window over the pooled
     # values; the Spark plan may only contain the ranking operator's
@@ -1404,11 +1422,12 @@ def test_pr_audit_fullouter_equi_join(spark, sf_dir, monkeypatch):
         assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_lorenz_gini_broadcast_scalar(spark, sf_dir):
+def test_lorenz_gini_broadcast_scalar(spark, sf_dir, monkeypatch):
     """Lorenz deciles rank via the two-level scheme; the 1-row Gini
     scalar attaches by broadcast; the only windows run over the 10-row
     decile frame."""
-    plan = _plan(spark, sf_dir, "revenue_lorenz_gini")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "revenue_lorenz_gini"))
     assert "rangepartitioning" in plan
     assert "CartesianProduct" not in plan
 
@@ -1455,12 +1474,14 @@ def test_text_profile_bounded_aggs(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_migration_two_rankings_no_global_sort(spark, sf_dir):
-    """Both half-period quartile assignments use the two-level ranking
-    (range partitioning); the migration matrix is an equi-join +
-    16-key aggregate."""
-    plan = _plan(spark, sf_dir, "customer_quartile_migration")
-    assert plan.count("rangepartitioning") >= 2
+def test_migration_two_rankings_no_global_sort(spark, sf_dir, monkeypatch):
+    """Both half-period quartile assignments come from ONE two-level
+    ranking (range partitioning) under the total order (half, spend,
+    custkey); the migration matrix is an equi-join + 16-key
+    aggregate."""
+    plan = "\n".join(_plans_with_pins(
+        spark, sf_dir, monkeypatch, "customer_quartile_migration"))
+    assert plan.count("rangepartitioning") == 1
     assert "CartesianProduct" not in plan
 
 
@@ -1568,10 +1589,11 @@ def test_collocation_dice_broadcast_unigrams_topk(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_curriculum_two_level_ranking(spark, sf_dir):
+def test_curriculum_two_level_ranking(spark, sf_dir, monkeypatch):
     """Deciles come from the range-partitioned two-level ranking — no
     single-partition global sort of the corpus."""
-    plan = _plan(spark, sf_dir, "curriculum_stages")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "curriculum_stages"))
     assert "rangepartitioning" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -1816,19 +1838,23 @@ def test_mix_temperature_dimension_sized(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_padding_audit_two_level_ranking(spark, sf_dir):
+def test_padding_audit_two_level_ranking(spark, sf_dir, monkeypatch):
     """Both policy batchings use the range-partitioned two-level
     ranking — no single-partition global sort of the corpus."""
-    plan = _plan(spark, sf_dir, "padding_waste_audit")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "padding_waste_audit"))
     assert "rangepartitioning" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_vocab_growth_two_level_ranking_no_corpus_window(spark, sf_dir):
+def test_vocab_growth_two_level_ranking_no_corpus_window(
+    spark, sf_dir, monkeypatch
+):
     """Checkpoints come from the range-partitioned ranking + integer
     ntile law — the oracle's global ntile() would be a
     single-partition corpus window."""
-    plan = _plan(spark, sf_dir, "vocab_growth_curve")
+    plan = "\n".join(
+        _plans_with_pins(spark, sf_dir, monkeypatch, "vocab_growth_curve"))
     assert "rangepartitioning" in plan
     assert "CartesianProduct" not in plan
 

@@ -144,6 +144,38 @@ def test_fetch_and_extract_multi_match_null(spark, fixture_dir):
     assert rows["nytimes"] is None
 
 
+def test_newsapi_query_params_quotes_page_and_section():
+    """S2 query construction (reference realtimeapi.py:29-47): the
+    quoted '"page" +"section"' q-string plus the fixed parameters."""
+    from data_pipeline_playground_spark.sources.http_sources import (
+        newsapi_query_params,
+    )
+
+    assert newsapi_query_params("Alan Turing", "Early life") == {
+        "q": '"Alan Turing" +"Early life"',
+        "language": "en",
+        "sortBy": "relevancy",
+        "pageSize": "5",
+    }
+
+
+def test_reddit_search_query_site_chain_subject_topic():
+    """S3 query construction (reference reddit.py:26-43): the site
+    OR-chain in parentheses, AND subject, AND topic only when given."""
+    from data_pipeline_playground_spark.sources.http_sources import (
+        reddit_search_query,
+    )
+
+    sites = ["nytimes.com", "bbc.co.uk"]
+    assert reddit_search_query(sites, "Alan Turing") == (
+        "(site:nytimes.com OR site:bbc.co.uk) AND Alan Turing"
+    )
+    assert reddit_search_query(sites, "Alan Turing", "Early life") == (
+        "(site:nytimes.com OR site:bbc.co.uk) AND Alan Turing AND Early life"
+    )
+    assert reddit_search_query(["a.org"], "x") == "(site:a.org) AND x"
+
+
 def test_css_select_reference_selector_shapes():
     """Every selector shape the reference registry uses
     (news_parsers.py:16-51) resolves correctly."""
