@@ -134,19 +134,24 @@ def word_ngrams(tokens: Column, n: int) -> Column:
     """Distinct word n-grams of a token array (reference utils.py:1-30).
 
     Built from higher-order functions (sequence + transform), no UDF:
-    gram i = concat_ws(' ', slice(tokens, i, n)).
+    gram i = concat_ws(' ', slice(tokens, i, n)). ``tokens`` is bound
+    once (see ``once``): it is referenced ~n+2 times per gram, and an
+    inline ``tokenize(...)`` would otherwise re-run per reference.
     """
-    # Guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark,
-    # so emit an empty array when there are fewer than n tokens.
-    idx = F.when(
-        F.size(tokens) >= n, F.sequence(F.lit(1), F.size(tokens) - (n - 1))
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    # gram via n O(1) element_at lookups — NOT slice(), whose per-index
-    # array copy makes the whole transform O(len²) per document.
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens, i + off) for off in range(n)]
-        ),
-    )
-    return F.array_distinct(grams)
+
+    def grams(toks: Column) -> Column:
+        # Guard: sequence(1, 0) would generate a DESCENDING [1, 0] in
+        # Spark, so emit an empty array when there are fewer than n tokens.
+        idx = F.when(
+            F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
+        ).otherwise(F.expr("array()").cast("array<int>"))
+        # gram via n O(1) element_at lookups — NOT slice(), whose per-index
+        # array copy makes the whole transform O(len²) per document.
+        return F.array_distinct(F.transform(
+            idx,
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(toks, i + off) for off in range(n)]
+            ),
+        ))
+
+    return once(tokens, grams)

@@ -11,18 +11,25 @@ which is the reference's greedy-chain behavior (pipeline.py:22-42).
 Algorithm: iterative min-label propagation ("hash-to-min") —
   label(v) ← min(label(v), min over neighbors u of label(u))
 each round is one join + partial-aggregatable min, converging in
-O(graph diameter) rounds. Near-dup graphs have tiny components (dozens
-of docs, diameter ≤ a few), so the loop runs 2-4 rounds in practice;
-the per-round localCheckpoint truncates lineage so round k doesn't
-replay rounds 1..k-1. For adversarially deep graphs (long chains),
-switch to the large-star/small-star contraction of Kiveris et al.
-("Connected Components in MapReduce and Beyond", SoCC'14), which
-converges in O(log² n) with the same join-shaped rounds.
+O(graph diameter) rounds. Labels live on edge endpoints only (the
+first round is a groupBy-min of the edge list itself), so a round's
+shuffle covers the near-dup docs, not the corpus; singletons are
+labeled by one final join with the node list. Near-dup graphs have
+tiny components (dozens of docs, diameter ≤ a few), so the loop runs
+2-4 rounds in practice. Each round is ONE Spark job: its eager
+localCheckpoint truncates lineage (round k doesn't replay rounds
+1..k-1) and carries an ``observe`` metric that counts the labels the
+round changed, which is the convergence test. A graph that has not
+converged after MAX_ROUNDS raises. For adversarially deep graphs
+(long chains), use ``connected_components_star``, the
+large-star/small-star contraction of Kiveris et al. ("Connected
+Components in MapReduce and Beyond", SoCC'14), which converges in
+O(log² n) with the same join-shaped rounds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 MAX_ROUNDS = 25
@@ -34,16 +41,20 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     """(node → component representative) for an undirected edge list.
 
     ``nodes``: one row per vertex (singletons allowed — they become
-    their own component). ``edges``: similar pairs, direction ignored.
+    their own component). ``edges``: similar pairs, direction ignored;
+    every endpoint must be a row of ``nodes`` (the components are
+    those of the edge graph, and ``nodes`` selects the output rows).
     Returns (id_col, component_id) where component_id is the MIN vertex
     id in the component — deterministic, engine-portable.
 
     Every round shuffles by vertex id (the join and the min-agg share
     the key, so the exchange is reused); the edge list itself is
     symmetrized once and checkpointed (its blocks are released with
-    the frame, no unpersist needed). Convergence is detected with a
-    count of changed labels — one cheap action per round on a
-    checkpointed frame.
+    the frame, no unpersist needed). Convergence is read from an
+    ``observe`` count of changed labels on the round's own checkpoint
+    job — no second action per round. Raises RuntimeError when the
+    labels still change after MAX_ROUNDS rounds (graph diameter too
+    deep for propagation: use ``connected_components_star``).
     """
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -51,37 +62,51 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
+    # round 1: every endpoint takes the min of itself and its neighbors
+    labels = (
+        sym.groupBy("a")
+        .agg(F.min("b").alias("nmin"))
+        .select(F.col("a").alias("node"), F.least("a", "nmin").alias("label"))
+        .localCheckpoint(eager=True)
+    )
 
-    for _round in range(MAX_ROUNDS):
+    for _round in range(1, MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym["b"] == labels["node"])
             .groupBy("a")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["a"], "left")
+        changes = Observation()
+        labels = (
+            labels.join(neighbor_min, labels["node"] == neighbor_min["a"])
             .select(
                 "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
+                F.col("label").alias("old"),
+                F.least("label", "nmin").alias("label"),
             )
+            .observe(
+                changes, F.count_if(F.col("label") != F.col("old")).alias("changed")
+            )
+            .select("node", "label")
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if changes.get["changed"] == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after {MAX_ROUNDS} "
+            "rounds; the graph is too deep for min-label propagation — use "
+            "connected_components_star"
+        )
 
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("component_id"))
+    return (
+        nodes.select(F.col(id_col).alias("node"))
+        .join(labels, "node", "left")
+        .select(
+            F.col("node").alias(id_col),
+            F.coalesce("label", "node").alias("component_id"),
+        )
+    )
 
 
 def connected_components_star(nodes: DataFrame, edges: DataFrame,

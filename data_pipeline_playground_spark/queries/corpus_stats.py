@@ -967,19 +967,11 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     key becomes its xxhash64 like duplicate_spans.
     """
     docs = table(spark, sf_dir, "documents")
-    from data_pipeline_playground_spark.functions.text import once, word_ngrams
+    from data_pipeline_playground_spark.functions.text import word_ngrams
 
-    # once(): word_ngrams references its token array ~5× per gram;
-    # without the lambda binding, CollapseProject re-runs the whole
-    # tokenizer per reference (measured 18 s → sub-second at sf0.1).
     g = docs.select(
         "doc_id",
-        F.explode(
-            once(
-                tokenize(F.col("text")),
-                lambda toks: word_ngrams(toks, NOVELTY_N),
-            )
-        ).alias("gram"),
+        F.explode(word_ngrams(tokenize(F.col("text")), NOVELTY_N)).alias("gram"),
     )
     first = g.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (

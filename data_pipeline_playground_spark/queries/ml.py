@@ -82,43 +82,61 @@ def _tokens_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", tokenize(F.col("text")).alias("tokens"))
 
 
-def _tfidf_features(tokens_df: DataFrame):
+def _tfidf_features(tokens_df: DataFrame, n_docs: int):
     """Term counts → IDF → L2 Normalizer (reference cluster.py:25-30:
     TfidfVectorizer(smooth_idf=True) + L2 norm). Adds ``tf``, ``tfidf``
     and ``features`` to ``tokens_df``; returns (frame, vocabulary).
+    ``n_docs`` is the row count of ``tokens_df``, docs with no tokens
+    included; ``doc_id`` must be unique per row.
 
     The vocabulary is one SQL aggregate with a total order: term
     counts, ``count desc, term asc``, the first 1 << 18 terms. These
     are the terms ``CountVectorizer.fit`` keeps, but a fit orders tied
-    counts by task order, so its term indices vary from run to run."""
-    from pyspark.ml.feature import IDF, CountVectorizerModel, Normalizer
+    counts by task order, so its term indices vary from run to run.
+    The same aggregate counts each term's documents, so the IDF weights
+    come with the vocabulary and no ``IDF.fit`` pass runs over the tf
+    vectors: MLlib's formula log((m + 1) / (df + 1)), evaluated with
+    ``java.lang.Math.log`` as MLlib does (Spark SQL's ``ln`` is
+    ``StrictMath``, which may differ in the last bit)."""
+    from pyspark.ml.feature import CountVectorizerModel, ElementwiseProduct, Normalizer
+    from pyspark.ml.linalg import Vectors
 
-    vocab = [
-        r.term
-        for r in tokens_df.select(F.explode("tokens").alias("term"))
-        .groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), F.asc("term")).limit(1 << 18).collect()
-    ]
+    # java_method returns the double's string form, which round-trips
+    idf = F.java_method(
+        F.lit("java.lang.Math"), F.lit("log"),
+        (F.lit(float(n_docs)) + 1.0) / (F.col("df").cast("double") + 1.0),
+    ).cast("double")
+    rows = (
+        tokens_df.select("doc_id", F.explode("tokens").alias("term"))
+        .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+        .groupBy("term").agg(F.sum("tf").alias("n"), F.count(F.lit(1)).alias("df"))
+        .orderBy(F.desc("n"), F.asc("term")).limit(1 << 18)
+        .select("term", idf.alias("idf"))
+        .collect()
+    )
+    vocab = [r.term for r in rows]
     cv_model = CountVectorizerModel.from_vocabulary(vocab, inputCol="tokens", outputCol="tf")
-    tf = cv_model.transform(tokens_df)
-    idf = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
-    feats = idf.transform(tf)
+    weigh = ElementwiseProduct(
+        scalingVec=Vectors.dense([r.idf for r in rows]), inputCol="tf", outputCol="tfidf"
+    )
     norm = Normalizer(inputCol="tfidf", outputCol="features", p=2.0)
-    return norm.transform(feats), vocab
+    return norm.transform(weigh.transform(cv_model.transform(tokens_df))), vocab
 
 
 def _tfidf_features_memo(spark: SparkSession, sf_dir: str):
     """Corpus TF-IDF features, built once per (session, sf_dir) —
     KMeans, BisectingKMeans (``features``) and LDA (``tf``) all read
     the identical documents table, so the ordered vocabulary, the IDF
-    fit and the pinned (doc_id, tf, features) frame are shared and the
-    same on every run. Returns (features_df, vocabulary, n_docs)."""
+    weights and the pinned (doc_id, tf, features) frame are shared and
+    the same on every run. Returns (features_df, vocabulary, n_docs)."""
     from data_pipeline_playground_spark.caching import memo
 
     def build():
-        feats, vocab = _tfidf_features(_tokens_df(spark, sf_dir))
+        toks = _tokens_df(spark, sf_dir)
+        n = toks.count()
+        feats, vocab = _tfidf_features(toks, n)
         feats = feats.select("doc_id", "tf", "features").localCheckpoint(eager=True)
-        return (feats, vocab, feats.count())
+        return (feats, vocab, n)
 
     return memo(spark, "tfidf_features", sf_dir, build)
 

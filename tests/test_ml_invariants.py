@@ -51,9 +51,10 @@ def test_tfidf_vocabulary_independent_of_partitioning(spark, sf_dir):
     )
 
     toks = _tokens_df(spark, sf_dir)
+    n = toks.count()
 
     def featurize(n_parts):
-        feats, vocab = _tfidf_features(toks.repartition(n_parts))
+        feats, vocab = _tfidf_features(toks.repartition(n_parts), n)
         arrays = feats.select(
             "doc_id",
             *[vector_to_array(c).alias(c) for c in ("tf", "tfidf", "features")],
@@ -69,6 +70,43 @@ def test_tfidf_vocabulary_independent_of_partitioning(spark, sf_dir):
     one = featurize(1)
     assert one[0] == want
     assert featurize(7) == one
+
+
+def test_tfidf_idf_matches_mllib_fit(spark, sf_dir):
+    """The IDF weights taken from the vocabulary aggregate give
+    bit-identical tfidf and feature vectors to an ``IDF.fit`` over the
+    same tf vectors, with a token-less document counted in m."""
+    from pyspark.ml.feature import IDF, CountVectorizerModel, Normalizer
+
+    from data_pipeline_playground_spark.queries.ml import (
+        _tfidf_features,
+        _tokens_df,
+    )
+
+    toks = _tokens_df(spark, sf_dir)
+    empty_id = toks.agg(F.max("doc_id")).first()[0] + 1
+    toks = toks.unionByName(
+        spark.createDataFrame([(empty_id, [])], toks.schema)
+    )
+    n = toks.count()
+    got, vocab = _tfidf_features(toks, n)
+
+    tf = CountVectorizerModel.from_vocabulary(
+        vocab, inputCol="tokens", outputCol="tf"
+    ).transform(toks)
+    want = Normalizer(inputCol="tfidf", outputCol="features", p=2.0).transform(
+        IDF(inputCol="tf", outputCol="tfidf").fit(tf).transform(tf)
+    )
+
+    def rows(df):
+        return {
+            r.doc_id: (r.tf, r.tfidf, r.features)
+            for r in df.select("doc_id", "tf", "tfidf", "features").collect()
+        }
+
+    got_rows, want_rows = rows(got), rows(want)
+    assert len(got_rows) == n and got_rows[empty_id][0].numNonzeros() == 0
+    assert got_rows == want_rows
 
 
 def test_lexrank_topk_per_group(spark, sf_dir):

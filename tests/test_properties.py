@@ -10,6 +10,7 @@ from __future__ import annotations
 import random
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -230,6 +231,43 @@ def test_components_star_long_chain(spark):
         for r in connected_components_star(nodes, edges).collect()
     }
     assert got == {i: 0 for i in range(n)}
+
+
+def test_connected_components_long_chain_raises(spark):
+    """A 30-node chain (diameter 29) does not converge within
+    MAX_ROUNDS of min-label propagation: the operator must raise and
+    name the contraction variant, not return half-propagated labels."""
+    from data_pipeline_playground_spark.operators.components import (
+        connected_components,
+    )
+
+    n = 30
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "ci bigint, cj bigint"
+    )
+    with pytest.raises(RuntimeError, match="connected_components_star"):
+        connected_components(nodes, edges).collect()
+
+
+def test_connected_components_sparse_edges_many_singletons(spark):
+    """1000 nodes, 3 edges: labels propagate over the edge endpoints
+    only, and every other node comes back as its own component."""
+    from data_pipeline_playground_spark.operators.components import (
+        connected_components,
+    )
+
+    nodes = spark.createDataFrame([(i,) for i in range(1000)], "doc_id bigint")
+    edges = spark.createDataFrame(
+        [(999, 500), (500, 7), (42, 41)], "ci bigint, cj bigint"
+    )
+    got = {
+        r.doc_id: r.component_id
+        for r in connected_components(nodes, edges).collect()
+    }
+    want = {i: i for i in range(1000)}
+    want.update({999: 7, 500: 7, 42: 41})
+    assert got == want
 
 
 @given(

@@ -53,6 +53,19 @@ def test_word_ngrams_edges(spark):
     assert out[2].g == []
 
 
+def test_word_ngrams_binds_tokenizer_once(spark):
+    """An inline tokenize(...) argument is evaluated once per row: the
+    optimized plan holds the tokenizer's split(lower(...)) exactly
+    once, not once per token-array reference inside the gram lambda."""
+    from data_pipeline_playground_spark.functions.text import tokenize, word_ngrams
+
+    df = spark.createDataFrame([("a b c d",)], "text string")
+    q = df.select(word_ngrams(tokenize(F.col("text")), 3).alias("g"))
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(lower(") == 1, plan
+    assert q.first().g == ["a b c", "b c d"]
+
+
 def test_rolling_hash_matches_duckdb(spark):
     import duckdb
 
