@@ -178,15 +178,8 @@ def main() -> None:
             k = f"memo_build:{e['name']}"
             memo_build[k] = memo_build.get(k, 0.0) + e["sec"]
 
-    # Configuration provenance: the effective LSH plane mode (pinned vs
-    # derived changes what the whole similarity family computes per
-    # corpus size) and $SPARK_GRAFT_EXTRA_CONFS (session-wide Spark
-    # config), so a record states the configuration it measured.
-    from data_pipeline_playground_spark.queries import similarity as _sim
-
-    lsh_mode = (
-        f"pinned:{_sim.N_PLANES}" if _sim.N_PLANES is not None else "derived"
-    )
+    # Configuration provenance: $SPARK_GRAFT_EXTRA_CONFS (session-wide
+    # Spark config), so a record states the configuration it measured.
     extra_confs = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
 
     # Warmup at the smallest SF: JIT, codegen cache, parquet footers.
@@ -345,7 +338,6 @@ def main() -> None:
         # unrecorded warm-up runs that raised: a query that cannot even
         # warm up is named here instead of being silently skipped
         out["warmup_failed"] = warmup_failed
-    out["lsh_planes_mode"] = lsh_mode
     out["extra_confs"] = extra_confs
     out["sentinel_probes"] = probes
     out["probe_names"] = probe_names

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_playground_spark.session import spread_scan
+
 # Fuzzy-dedup knobs: compare on a fixed-width prefix of the document
 # text (the "title" analogue — reference dedups on thread titles,
 # pipeline.py:26-29) with similarity threshold 80 (pipeline.py:29).
@@ -78,14 +80,8 @@ def fuzzy_dedup_survivors(df: DataFrame, text_col: str = "text",
         F.substring(F.col(text_col), 1, TITLE_PREFIX_LEN).alias("_title"),
         F.length(F.substring(F.col(text_col), 1, TITLE_PREFIX_LEN)).alias("_len"),
     )
-    # The parquet scan is often a single partition at test scale; the
-    # nested-loop anti-join parallelizes over LEFT partitions, so spread
-    # the probe side across the cluster explicitly.
-    shuffle_n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # round-robin with an explicit count: AQE leaves REPARTITION_BY_NUM
-    # alone, whereas hash repartitioning can be coalesced back to one
-    # partition at this data size, serializing the nested-loop join.
-    left = titles.repartition(shuffle_n)
+    # the nested-loop anti-join parallelizes over LEFT partitions
+    left = spread_scan(titles)
     right = titles.select(
         F.col("_i").alias("_j"), F.col("_title").alias("_title_r"),
         F.col("_len").alias("_len_r"),

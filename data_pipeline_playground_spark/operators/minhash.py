@@ -23,6 +23,7 @@ from data_pipeline_playground_spark.functions.text import (
     rolling_hash,
     tokenize,
 )
+from data_pipeline_playground_spark.session import spread_scan
 
 SHINGLE_N = 3  # word 3-gram shingles
 NUM_HASHES = 16  # K signature components
@@ -49,12 +50,9 @@ def shingle_hashes(docs: DataFrame, text_col: str = "text",
     """
     from data_pipeline_playground_spark.functions.text import word_ngrams
 
-    # The tokenize→ngram→hash projection is the CPU-heavy part of the
-    # whole pipeline and is narrow — but test-scale parquet is a single
-    # partition, so spread the scan explicitly or the fold runs on one
-    # core (at real scale many files make this a no-op-equivalent).
-    shuffle_n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return docs.repartition(shuffle_n).select(
+    # the tokenize→ngram→hash projection is the CPU-heavy part of the
+    # whole pipeline and is narrow
+    return spread_scan(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(word_ngrams(tokenize(F.col(text_col)), SHINGLE_N)).alias("sh"),
     ).select("doc_id", rolling_hash(F.col("sh")).alias("h"))

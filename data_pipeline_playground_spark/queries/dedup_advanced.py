@@ -7,7 +7,6 @@ polynomial fold, so DuckDB reproduces identical signatures.
 
 from __future__ import annotations
 
-import os
 from itertools import combinations as _combinations
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,6 +31,7 @@ from data_pipeline_playground_spark.operators.minhash import (
     signatures,
 )
 from data_pipeline_playground_spark.registry import query
+from data_pipeline_playground_spark.session import spread_scan
 from data_pipeline_playground_spark.tables import table
 
 # ---- shared SQL fragments --------------------------------------------------
@@ -134,16 +134,13 @@ def _grams_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_playground_spark.caching import memo
 
     def build():
-        shuffle_n = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
         docs = table(spark, sf_dir, "documents").where(
             _doc_sample_pred(F.col("doc_id"))
         )
         from data_pipeline_playground_spark.functions.text import word_ngrams
 
         return (
-            docs.repartition(shuffle_n)
+            spread_scan(docs)
             .select(
                 "doc_id",
                 F.explode(
@@ -329,38 +326,17 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # n/64 docs are quadratic by construction once n approaches the key
 # space).
 #
-# TWO TIERS (VERDICT r10 #4 — the growth law as configuration, not
-# prose), selected by $SPARK_GRAFT_SIMHASH_TIER at import time; the
-# oracle SQL derives from the same constants, so BOTH tiers are
-# checked against DuckDB by the same machinery:
-#
-# - "2of6" (default): 60-bit fingerprint, 6 ten-bit blocks, match on
-#   2 → C(6,2) = 15 keys over a 2^20 key space per position.
-#   Candidate work ~15·n²/2^21 + true pairs — measured exponent 0.15
-#   at the 10× probe (SCALE.md). The round-12 SECOND-decade probe
-#   found the doc-grain form of this join bends to 1.70 at 500k docs
-#   (duplicate clusters + token-correlated block values — mega-bucket
-#   profile in SCALE.md); candidates now generate at distinct-
-#   fingerprint grain (_simhash_pairs_build), measured back to ~1.0
-#   with BOTH tiers converging — the tier dial only moves the
-#   candidate join, which no longer dominates.
-# - "3of8": 64-bit fingerprint (third salt fills bits 60-63), 8
-#   eight-bit blocks, match on 3 → C(8,3) = 56 keys over a 2^24 key
-#   space. 3.7× the key rows, 16× smaller buckets: the tier to run
-#   once n per partition-of-work approaches 2^20 docs (at 100 TB,
-#   after content-prefix sharding, each shard runs this config).
-#   3-of-8 blocking tolerates hamming ≤ 5 ⊇ ≤ 4 — candidate RECALL is
-#   preserved — but the pair SETS are not identical across tiers
-#   (ADVICE r11 #3): the third salt adds four fingerprint bits, so the
-#   64-bit hamming distance can exceed HAMMING_K where the 60-bit one
-#   did not — the 3of8 pair set is a subset of 2of6's. Each tier
-#   therefore validates against ITS OWN derived oracle (the SQL below
-#   is built from the same tier constants), never cross-tier.
-SIMHASH_TIER = os.environ.get("SPARK_GRAFT_SIMHASH_TIER", "2of6")
-if SIMHASH_TIER == "3of8":
-    SIMHASH_BITS, N_BLOCKS, BLOCK_BITS, MATCH_BLOCKS = 64, 8, 8, 3
-else:
-    SIMHASH_BITS, N_BLOCKS, BLOCK_BITS, MATCH_BLOCKS = 60, 6, 10, 2
+# 60-bit fingerprint (two salts), 6 ten-bit blocks, match on 2 →
+# C(6,2) = 15 keys over a 2^20 key space per position. Candidate work
+# ~15·n²/2^21 + true pairs — measured exponent 0.15 at the 10× probe
+# (SCALE.md). The round-12 second-decade probe found the doc-grain
+# form of this join bends to 1.70 at 500k docs (duplicate clusters +
+# token-correlated block values — mega-bucket profile in SCALE.md);
+# candidates now generate at distinct-fingerprint grain
+# (_simhash_pairs_build), measured back to ~1.0. A 64-bit 3-of-8
+# blocking converged with this one at 100× (80.0 s vs 77.9 s) and ran
+# 2.4× slower at sf scale (15.48 s vs 6.32 s — SCALE.md).
+SIMHASH_BITS, N_BLOCKS, BLOCK_BITS, MATCH_BLOCKS = 60, 6, 10, 2
 HAMMING_K = 4  # near-dup iff hamming distance <= 4
 assert N_BLOCKS * BLOCK_BITS == SIMHASH_BITS
 assert N_BLOCKS - MATCH_BLOCKS >= HAMMING_K  # pigeonhole recall guarantee
@@ -384,16 +360,9 @@ def _bit_case(col_prefix: str = "") -> str:
     )
 
 
-# bit 63's place value is BIGINT_MIN — constructible in Spark via
-# shiftleft (Java wraps) but an Out of Range error in DuckDB; the
-# literal CASE arm keeps both engines on the same two's-complement
-# fingerprint. sum() is additionally cast back to BIGINT: DuckDB sums
-# BIGINT into HUGEINT, and xor on a negative HUGEINT sign-extends into
-# the upper 64 bits, which would inflate bit_count.
-_BIT_VALUE = (
-    "CASE WHEN b = 63 THEN CAST(-9223372036854775808 AS BIGINT) "
-    "ELSE (CAST(1 AS BIGINT) << b) END"
-)
+# place value of fingerprint bit b; the fingerprint sum is cast back to
+# BIGINT because DuckDB sums BIGINT into HUGEINT
+_BIT_VALUE = "(CAST(1 AS BIGINT) << b)"
 
 _SQL_SALTED_HASHES = ", ".join(
     f"{sql_rolling_hash('tk' if s == 0 else 'tk || ' + repr('#' * s))} "
@@ -456,20 +425,16 @@ WHERE NOT EXISTS (SELECT 1 FROM pairs WHERE pairs.ci = d.doc_id)
 
 
 def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id → simhash ({SIMHASH_BITS}-bit, tier-selected — see the
-    constants block) via distinct-token bit voting over salted rolling
-    hashes (30 bits per salt — engine-portable, so the fingerprints
-    are bit-identical in DuckDB).
+    """doc_id → 60-bit simhash via distinct-token bit voting over
+    salted rolling hashes (30 bits per salt — engine-portable, so the
+    fingerprints are bit-identical in DuckDB).
 
-    The scan is explicitly repartitioned before the interpreted
-    rolling-hash fold — test parquet is one partition and the fold is
-    the CPU-heavy step (at scale, many files make this a near-no-op).
-    The bit votes stay a (doc, bit) fan-out aggregate: the ~60× row
+    The scan is spread (spread_scan) before the interpreted
+    rolling-hash fold, the CPU-heavy step. The bit votes stay a (doc, bit) fan-out aggregate: the ~60× row
     expansion is cheap relative to a 60-wide CASE-WHEN aggregate row
     (measured ~2× faster warm at 30 bits), and shiftright by a COLUMN
     only exists in SQL form anyway."""
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    docs = table(spark, sf_dir, "documents").repartition(shuffle_n)
+    docs = spread_scan(table(spark, sf_dir, "documents"))
     th = docs.select(
         "doc_id",
         F.explode(F.array_distinct(tokenize(F.col("text")))).alias("tk"),
@@ -493,10 +458,6 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("w")
         )
     )
-    # _BIT_VALUE: bit 63's place value is BIGINT_MIN via the literal
-    # CASE arm (shared with the oracle) — Spark's shiftleft would wrap
-    # identically, but keeping the expression text shared keeps the
-    # two engines trivially in lockstep.
     return bitw.groupBy("doc_id").agg(
         F.sum(
             F.when(F.col("w") > 0, F.expr(_BIT_VALUE))
@@ -594,10 +555,9 @@ def _simhash_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: salted token-vote fingerprints with
     combinatorial block-key blocking (pigeonhole over hamming ≤ 4;
-    Manku et al. WWW 2007 scheme). Tier-configurable — 60-bit/2-of-6
-    default, 64-bit/3-of-8 via $SPARK_GRAFT_SIMHASH_TIER — see the
-    constants block for the measured quadratic the narrower round-9
-    blocking hit and the growth law."""
+    Manku et al. WWW 2007 scheme), 60-bit fingerprints matched on 2 of
+    6 blocks — see the constants block for the measured quadratic the
+    narrower round-9 blocking hit and the growth law."""
     return _simhash_pairs(spark, sf_dir)
 
 

@@ -22,6 +22,7 @@ from data_pipeline_playground_spark.functions.text import (
     tokenize,
 )
 from data_pipeline_playground_spark.registry import query
+from data_pipeline_playground_spark.session import spread_scan
 from data_pipeline_playground_spark.tables import table
 
 # train/val/test cut points over 100 hash buckets
@@ -214,12 +215,8 @@ def _doc_shingles_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_pipeline_playground_spark.operators.minhash import SHINGLE_N
 
     def build() -> DataFrame:
-        docs = table(spark, sf_dir, "documents")
-        shuffle_n = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
         return (
-            docs.repartition(shuffle_n)
+            spread_scan(table(spark, sf_dir, "documents"))
             .select(
                 "doc_id",
                 F.explode(

@@ -195,9 +195,7 @@ import random as _random
 # exact dial r12 set manually for its 100× probe). The DuckDB oracles
 # derive the SAME plane count IN-SQL from COUNT(*) (integer-exact —
 # see _SQL_PLANES), so each corpus size validates against its own
-# derived oracle with no side channel. $SPARK_GRAFT_LSH_PLANES pins a
-# fixed count exactly as before (every consumer AND oracle then bake
-# that literal — the r12 subprocess-oracle canary covers it).
+# derived oracle with no side channel.
 # MAX_PLANES is a SAFETY RAIL, not a tuning dial (round 15, VERDICT
 # r14 #3: the old 16-plane cap silently re-pinned the dial above
 # 2^16·64 ≈ 4.2M vectors — the exact failure mode the derived dial
@@ -214,18 +212,15 @@ import random as _random
 MIN_PLANES = 4
 MAX_PLANES = 34
 LSH_TARGET_BUCKET = 64
-_env_planes = _os.environ.get("SPARK_GRAFT_LSH_PLANES", "")
-N_PLANES: int | None = int(_env_planes) if _env_planes else None
 EMBED_DIM = 64
 _rng = _random.Random(1337)
-# deterministic hyperplane matrix, inlined into the oracle SQL; sized
-# to the pinned count under the env override, else MAX_PLANES (the
+# deterministic hyperplane matrix, inlined into the oracle SQL; the
 # derived count slices a prefix, so smaller configs share the same
 # leading planes — an 8-plane derived bucket id equals the old 8-plane
-# default's bit for bit)
+# default's bit for bit
 HYPERPLANES: list[list[float]] = [
     [round(_rng.uniform(-1.0, 1.0), 6) for _ in range(EMBED_DIM)]
-    for _ in range(N_PLANES if N_PLANES else MAX_PLANES)
+    for _ in range(MAX_PLANES)
 ]
 
 
@@ -243,17 +238,14 @@ _PLANES_CACHE: dict[tuple, int] = {}
 
 
 def lsh_planes(spark: SparkSession, sf_dir: str) -> int:
-    """Plane count for this corpus: the env override when pinned, else
-    derived from the embeddings row count (one count job per corpus,
-    cached — the same plan-build hyperparameter-fetch class as the
+    """Plane count for this corpus, derived from the embeddings row
+    count (one count job per corpus, cached — the same plan-build hyperparameter-fetch class as the
     cluster-count lookup in queries/ml.py). The cache key includes the
     embeddings file's (mtime, size) — ADVICE r13 #3: a corpus REBUILT
     at the same path with a different row count in one process (e.g.
     scale_probe chaining builds) would otherwise keep a stale plane
     count while the DuckDB oracle re-derives from the new COUNT(*),
     making query and oracle bucket differently."""
-    if N_PLANES is not None:
-        return N_PLANES
     path = _os.path.join(sf_dir, "embeddings.parquet")
     try:
         st = _os.stat(path)
@@ -271,31 +263,34 @@ def _sql_plane_literal(p: list[float]) -> str:
     return "[" + ", ".join(f"CAST({x} AS DOUBLE)" for x in p) + "]"
 
 
-# the oracle-side plane count: the pinned literal under the env
-# override, else derived in-SQL from COUNT(*) — integer-exact at the
-# boundaries (n/target is a dyadic rational; LOG2 of an exact power of
-# two is exact, and non-boundary values sit ≥ 2⁻¹⁴ in log2 away from
-# an integer for any realistic corpus count)
+# the oracle-side plane count, derived in-SQL from COUNT(*) —
+# integer-exact at the boundaries (n/target is a dyadic rational; LOG2
+# of an exact power of two is exact, and non-boundary values sit
+# ≥ 2⁻¹⁴ in log2 away from an integer for any realistic corpus count)
 _SQL_PLANES = (
-    str(N_PLANES)
-    if N_PLANES is not None
-    else (
-        f"(SELECT GREATEST({MIN_PLANES}, LEAST({MAX_PLANES}, "
-        f"CAST(CEIL(LOG2(CAST(count(*) AS DOUBLE) / {LSH_TARGET_BUCKET}.0)) "
-        f"AS INT))) FROM embeddings)"
-    )
+    f"(SELECT GREATEST({MIN_PLANES}, LEAST({MAX_PLANES}, "
+    f"CAST(CEIL(LOG2(CAST(count(*) AS DOUBLE) / {LSH_TARGET_BUCKET}.0)) "
+    f"AS INT))) FROM embeddings)"
 )
 
-_SQL_BUCKET = (
-    "("
-    + " + ".join(
-        f"(CASE WHEN {i} < {_SQL_PLANES} "
-        f"AND {_SQL_DOT.format(a='v', b=_sql_plane_literal(p))} > 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(HYPERPLANES)
+
+def _sql_bucket(planes_sql: str) -> str:
+    """Oracle sign-bit signature of ``v`` over the first ``planes_sql``
+    hyperplanes (a SQL integer expression) — the DuckDB mirror of
+    _bucket_col."""
+    return (
+        "("
+        + " + ".join(
+            f"(CASE WHEN {i} < {planes_sql} "
+            f"AND {_SQL_DOT.format(a='v', b=_sql_plane_literal(p))} > 0 "
+            f"THEN {1 << i} ELSE 0 END)"
+            for i, p in enumerate(HYPERPLANES)
+        )
+        + ")"
     )
-    + ")"
-)
+
+
+_SQL_BUCKET = _sql_bucket(_SQL_PLANES)
 
 _LSH_BUCKETS_SQL = f"""
 WITH e AS (SELECT vec_id, {_SQL_V} AS v FROM embeddings)
@@ -307,7 +302,7 @@ FROM e GROUP BY 1
 
 
 def _bucket_col(planes: int) -> Column:
-    """Spark mirror of _SQL_BUCKET: sign-bit signature over the first
+    """Spark mirror of _sql_bucket: sign-bit signature over the first
     ``planes`` hyperplanes — a narrow map, no shuffle; bucketing turns
     ANN search into an equi-join on the signature. ``planes`` comes
     from lsh_planes(spark, sf_dir) so the Spark plan computes exactly
@@ -327,10 +322,9 @@ def _bucket_col(planes: int) -> Column:
 @query("ann_lsh_buckets", oracle=_LSH_BUCKETS_SQL)
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket profile: p sign bits → 2^p
-    buckets, p derived from the corpus row count by default
-    (planes_for_count — ceil(log₂(n/64)) clamped to [4,16]) or pinned
-    via $SPARK_GRAFT_LSH_PLANES; the oracle derives the identical p
-    in-SQL from COUNT(*). The bucket
+    buckets, p derived from the corpus row count (planes_for_count —
+    ceil(log₂(n/64)) clamped to [MIN_PLANES, MAX_PLANES] = [4, 34]);
+    the oracle derives the identical p in-SQL from COUNT(*). The bucket
     id is the ANN join key at scale (same-bucket candidates only);
     this query verifies the signature computation end-to-end."""
     e = _embed_double(spark, sf_dir)
@@ -529,10 +523,10 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- multi-probe LSH (the production fix for single-probe recall) -----------
 
-# probe Hamming-0 and all Hamming-1 buckets; under the derived dial the
-# static range spans MAX_PLANES and the in-SQL WHERE trims to the
-# corpus's derived count (matching the Spark side's sequence bound)
-MULTIPROBE_BITS = N_PLANES if N_PLANES is not None else MAX_PLANES
+# probe Hamming-0 and all Hamming-1 buckets; the static range spans
+# MAX_PLANES and the in-SQL WHERE trims to the corpus's derived count
+# (matching the Spark side's sequence bound)
+MULTIPROBE_BITS = MAX_PLANES
 
 _LSH_MULTIPROBE_SQL = f"""
 WITH e AS (SELECT vec_id, {_SQL_V} AS v FROM embeddings),
@@ -1937,11 +1931,10 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     count FIXED — the round-12 second-decade probe measured exponent
     1.66 at 1M vectors under the then-default fixed 8 planes; the
     dial is now SELF-SETTING from the corpus row count
-    (planes_for_count — $SPARK_GRAFT_LSH_PLANES still pins it), so
-    this query's bucket grain coarsens only logarithmically with n.
-    The mutual check is a self-join on the n-row top-1 table; vectors
-    alone in their bucket have no neighbor and drop out, the
-    documented LSH trade.
+    (planes_for_count), so this query's bucket grain coarsens only
+    logarithmically with n. The mutual check is a self-join on the
+    n-row top-1 table; vectors alone in their bucket have no neighbor
+    and drop out, the documented LSH trade.
     """
     e = (
         _embed_double(spark, sf_dir)

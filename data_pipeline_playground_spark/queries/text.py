@@ -18,6 +18,7 @@ from data_pipeline_playground_spark.functions.text import (
     tokenize,
     word_ngrams,
 )
+from data_pipeline_playground_spark.operators.lexrank import tfidf_term_weights
 from data_pipeline_playground_spark.registry import query
 from data_pipeline_playground_spark.tables import table
 
@@ -472,28 +473,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF with smooth idf (reference cluster.py:25-30,
     smooth_idf=True: idf = ln((N+1)/(df+1)) + 1), top-5 terms per doc.
 
-    Plan: explode → two hash aggs (tf, df) → df join + scalar N
-    broadcast → per-doc window top-k. The df table is
-    VOCABULARY-sized — it grows with the corpus, so it carries no
-    broadcast hint (round-13 third-decade find in the LexRank twin of
-    this plan: a forced vocab broadcast read stage exponent 1.95 at
-    1.5M docs); AQE broadcasts it at runtime while the measured vocab
-    is small. The big shuffles are the tf agg and the final per-doc
-    window, both keyed by doc_id."""
-    docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
-    w = (
-        tf.join(df_, "term")
-        .join(F.broadcast(n_docs))
-        .withColumn(
-            "w",
-            F.col("tf")
-            * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
-        )
-    )
+    Plan: the shared weight operator (explode → tf and df hash aggs →
+    df join + scalar N broadcast, see tfidf_term_weights) → per-doc
+    window top-k. The big shuffles are the tf agg and the final
+    per-doc window, both keyed by doc_id."""
+    w = tfidf_term_weights(table(spark, sf_dir, "documents"))
     # rank on the ROUNDED weight: raw doubles can differ between
     # engines in the last ulp (libm ln), which would flip near-ties.
     win = Window.partitionBy("doc_id").orderBy(

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -57,3 +57,19 @@ def get_spark(app_name: str = "data-pipeline-playground-spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over ``spark.sql.shuffle.partitions`` before a
+    CPU-heavy narrow stage (tokenize, n-gram, rolling-hash fold) or the
+    probe side of a nested-loop join, which parallelizes over its
+    input partitions.
+
+    Test-scale parquet is a single partition, so without this the stage
+    runs on one core; at scale many files make it a near no-op. The
+    count is explicit: round-robin into a fixed number of partitions
+    is a REPARTITION_BY_NUM, which AQE leaves alone, whereas a hash
+    repartition can be coalesced back to one partition at this data
+    size."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return df.repartition(n)

@@ -242,26 +242,6 @@ def test_prebuild_serial_order_lightest_first(monkeypatch):
     assert prebuilt == ["heavy", "light", "mid"]  # names, sorted
 
 
-def test_bench_records_lsh_planes_mode():
-    """ADVICE r13 #2: the effective LSH plane configuration is a
-    recorded bench field (configuration provenance: it changes what
-    the similarity family computes); with no env pin the mode is
-    'derived'."""
-    import os
-
-    from data_pipeline_playground_spark.queries import similarity
-
-    if os.environ.get("SPARK_GRAFT_LSH_PLANES"):
-        assert similarity.N_PLANES is not None
-    else:
-        assert similarity.N_PLANES is None
-    mode = (
-        f"pinned:{similarity.N_PLANES}"
-        if similarity.N_PLANES is not None else "derived"
-    )
-    assert mode == "derived" or mode.startswith("pinned:")
-
-
 def test_plan_audit_global_window_detector():
     """Round 14 (VERDICT r13 #2): the GLOBALWIN heuristic fires on
     windowspecdefinition() text with no leading partition columns and

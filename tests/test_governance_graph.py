@@ -610,58 +610,42 @@ def test_discount_lift_covers_lineitem(spark, sf_dir):
         assert r["avg_quantity"] > 0 and r["total_price"] > 0
 
 
-def test_lsh_planes_config_and_12plane_oracle():
-    """Round 12 (second-decade probe find): the hyperplane count is
-    configuration — a fixed 2^8-bucket signature makes bucket-pairwise
-    consumers (mutual_nn_pairs) scale n²/2^planes, measured exponent
-    1.66 at 1M vectors. $SPARK_GRAFT_LSH_PLANES must activate at
-    import time, rebuild every derived constant (hyperplane matrix,
-    SQL bucket expression, multiprobe width), and the 12-plane config
-    must pass its own derived oracle end-to-end (bucket-local
-    semantics legitimately differ per config — the SimHash-tier
-    validation pattern)."""
-    import subprocess
-    import sys
+def test_lsh_bucket_matches_oracle_at_high_plane_counts(spark, sf_dir):
+    """The derived plane counts at the test SFs are 4 and 5, so the
+    registry oracles never reach the higher planes. Per vec_id, the
+    Spark signature must equal the DuckDB one at 12 planes (the
+    200 000-vector derived count) and at MAX_PLANES, whose bucket ids
+    pass bit 31 — the reason both engines carry them as BIGINT."""
+    from data_pipeline_playground_spark.queries import similarity as s
+    from tests.oracle import duckdb_conn
 
-    code = (
-        "import os, sys; os.environ['SPARK_GRAFT_LSH_PLANES'] = '12'\n"
-        "sys.path.insert(0, '/root/repo'); sys.path.insert(0, '/root/repo/tests')\n"
-        "from data_pipeline_playground_spark.queries import similarity as s\n"
-        "assert s.N_PLANES == 12 and len(s.HYPERPLANES) == 12\n"
-        "assert s.MULTIPROBE_BITS == 12\n"
-        "assert '2048' in s._SQL_BUCKET  # 1 << 11 plane weight present\n"
-        "from data_pipeline_playground_spark.session import get_spark\n"
-        "from data_pipeline_playground_spark.registry import"
-        " all_queries, all_oracle_sql\n"
-        "from oracle import duckdb_conn, compare\n"
-        "sf = '/root/testdata/sf0.001'\n"
-        "spark = get_spark('lsh-12plane-oracle')\n"
-        "q, o = all_queries(), all_oracle_sql()\n"
-        "for name in ('ann_lsh_buckets', 'mutual_nn_pairs'):\n"
-        "    compare(q[name](spark, sf), duckdb_conn(sf), o[name],\n"
-        "            name + '@12planes')\n"
-        "print('12planes OK')\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo",
-    )
-    assert out.returncode == 0, out.stderr[-800:]
-    assert "12planes OK" in out.stdout
+    con = duckdb_conn(sf_dir)
+    e = s._embed_double(spark, sf_dir)
+    for p in (12, s.MAX_PLANES):
+        got = dict(
+            e.select("vec_id", s._bucket_col(p).cast("long").alias("b"))
+            .collect()
+        )
+        want = dict(con.execute(
+            f"SELECT vec_id, CAST({s._sql_bucket(str(p))} AS BIGINT) "
+            f"FROM (SELECT vec_id, {s._SQL_V} AS v FROM embeddings)"
+        ).fetchall())
+        assert got == want, p
+        assert max(want.values()) < 1 << p
+    assert max(want.values()) >= 1 << 31
 
 
 def test_lsh_plane_dial_self_setting(spark):
-    """VERDICT r12 #3: with no $SPARK_GRAFT_LSH_PLANES pin the plane
-    count derives from the corpus row count at plan-build time —
-    unit-checked at two corpus sizes, and the pure-integer Python
-    derivation must equal the oracle's in-SQL CEIL(LOG2()) form at
-    boundary counts (the two sides must agree for EVERY n or a corpus
-    size could exist where query and oracle bucket differently)."""
+    """VERDICT r12 #3: the plane count derives from the corpus row
+    count at plan-build time — unit-checked at two corpus sizes, and
+    the pure-integer Python derivation must equal the oracle's in-SQL
+    CEIL(LOG2()) form at boundary counts (the two sides must agree for
+    EVERY n or a corpus size could exist where query and oracle bucket
+    differently)."""
     import duckdb
 
     import data_pipeline_playground_spark.queries.similarity as s
 
-    assert s.N_PLANES is None, "test requires the derived-default mode"
     # two corpus sizes: 500 vectors clamp to MIN_PLANES, 2000 derive 5
     assert s.lsh_planes(spark, "/root/testdata/sf0.001") == 4
     assert s.lsh_planes(spark, "/root/testdata/sf0.1") == 5

@@ -1,4 +1,5 @@
-"""Registry consistency + partitioned parquet sink round-trip."""
+"""Registry consistency, the package's environment surface, and the
+partitioned parquet sink round-trip."""
 
 from __future__ import annotations
 
@@ -35,6 +36,32 @@ def test_rows_only_queries_are_the_ml_set():
         "lexrank_summaries",
         "news_summaries",
     }
+
+
+def test_package_reads_environment_only_in_session():
+    """AST guard: a value the code can derive is not an environment
+    knob. Only session.py reads the environment, for the deployment
+    settings (cores, driver memory, extra Spark confs). The match is on
+    the attribute or imported name, so ``import os as _os`` and
+    ``from os import environ`` are caught too."""
+    import ast
+    import pathlib
+
+    import data_pipeline_playground_spark as pkg
+
+    env_names = {"environ", "environb", "getenv", "getenvb"}
+    root = pathlib.Path(pkg.__file__).parent
+    readers = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Attribute) and node.attr in env_names
+            ) or (
+                isinstance(node, ast.ImportFrom) and node.module == "os"
+                and any(a.name in env_names for a in node.names)
+            ):
+                readers.add(path.relative_to(root).as_posix())
+    assert readers == {"session.py"}
 
 
 def test_partitioned_parquet_roundtrip(spark, sf_dir, tmp_path):
