@@ -430,10 +430,11 @@ def _simhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints are bit-identical in DuckDB).
 
     The scan is spread (spread_scan) before the interpreted
-    rolling-hash fold, the CPU-heavy step. The bit votes stay a (doc, bit) fan-out aggregate: the ~60× row
-    expansion is cheap relative to a 60-wide CASE-WHEN aggregate row
-    (measured ~2× faster warm at 30 bits), and shiftright by a COLUMN
-    only exists in SQL form anyway."""
+    rolling-hash fold, the CPU-heavy step. The bit votes stay a
+    (doc, bit) fan-out aggregate: the ~60× row expansion is cheap
+    relative to a 60-wide CASE-WHEN aggregate row (measured ~2× faster
+    warm at 30 bits), and shiftright by a COLUMN only exists in SQL
+    form anyway."""
     docs = spread_scan(table(spark, sf_dir, "documents"))
     th = docs.select(
         "doc_id",

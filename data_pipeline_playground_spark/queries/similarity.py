@@ -239,8 +239,9 @@ _PLANES_CACHE: dict[tuple, int] = {}
 
 def lsh_planes(spark: SparkSession, sf_dir: str) -> int:
     """Plane count for this corpus, derived from the embeddings row
-    count (one count job per corpus, cached — the same plan-build hyperparameter-fetch class as the
-    cluster-count lookup in queries/ml.py). The cache key includes the
+    count (one count job per corpus, cached — the same plan-build
+    hyperparameter-fetch class as the cluster-count lookup in
+    queries/ml.py). The cache key includes the
     embeddings file's (mtime, size) — ADVICE r13 #3: a corpus REBUILT
     at the same path with a different row count in one process (e.g.
     scale_probe chaining builds) would otherwise keep a stale plane
